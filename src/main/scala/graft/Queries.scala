@@ -94,19 +94,13 @@ object Queries {
     import spark.implicits._
     val eng = graft.api.SearchEngine.open(spark, dir, tokenizer = Some(simpleTokenizer))
     val terms = simpleTokenizer.tokenize("merge join sort table").map(FxHash.hash32u).toArray.distinct
-    val (posts, nLive) = eng.liveQueryState(terms)
+    val view = eng.liveView(terms)
     val avgdl = IndexManifest.read(s"$dir/index").avgdl.toDouble
-    // r6: when the base IS the live view (post-compaction, no pending
-    // deltas) the per-term df is exactly the termstats df — one posting per
-    // (term, doc), so the block-count sum equals countDistinct(doc_id) —
-    // and the broadcast side no longer re-evaluates the posting-decode
-    // subtree. With pending deltas the live aggregate stays.
-    val dfs =
-      if (!eng.hasPendingDeltas)
-        new Bm25Index(spark, s"$dir/index", Some(simpleTokenizer)).termStatsFor(terms)
-      else posts.toDF().groupBy($"term").agg(countDistinct($"doc_id").as("df"))
-    val scored = posts.toDF().join(broadcast(dfs), "term")
-      .withColumn("idf", log(lit(1.0) + (lit(nLive.toDouble) - $"df" + lit(0.5)) / ($"df" + lit(0.5))))
+    // the view's live df, one entry per query term, rides in the plan as a
+    // literal map
+    val scored = view.postings.toDF()
+      .withColumn("df", element_at(typedLit(view.df), $"term"))
+      .withColumn("idf", log(lit(1.0) + (lit(view.n.toDouble) - $"df" + lit(0.5)) / ($"df" + lit(0.5))))
       .withColumn("w", $"tf" * lit(2.2) / ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dl" / lit(avgdl))))
       .groupBy($"doc_id").agg(round(sum($"idf" * $"w"), 3).as("score_r"))
     // map the engine's surrogate ids back to the original doc ids via the log

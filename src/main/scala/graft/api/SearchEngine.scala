@@ -1,9 +1,10 @@
 package graft.api
 
-import graft.bm25.{Bm25Params, Embedder}
+import graft.bm25.{Bm25Math, Bm25Params, Embedder}
 import graft.index._
 import graft.text.{Bm25Tokenizer, FxHash, Language, TextTokenizer}
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** A document (reference `Document<K>`, `/root/reference/src/search.rs:17-38`).
@@ -18,22 +19,25 @@ final case class SearchResult(id: String, contents: String, score: Float)
 private[api] final case class LogRow(doc_id: Long, key: String, contents: String,
                                      seq: Long, tombstone: Boolean)
 
-/** The document-lifecycle + retrieval surface (reference `SearchEngine`,
-  * `/root/reference/src/search.rs:52-133`), rebuilt over the distributed
+/** The document-lifecycle + retrieval surface (the `bm25` crate's
+  * `SearchEngine`, `src/search.rs:52-133`), rebuilt over the distributed
   * index:
   *
   *   - the doc store is a parquet append log (key, contents, seq, tombstone)
   *     — the reference's `HashMap<K, String>` (`search.rs:52-59`);
   *   - `upsert`/`remove` append delta rows (I1/I2 in SURVEY §2.4): the base
-  *     index is immutable; at query time base postings (minus superseded doc
-  *     versions) are unioned with on-the-fly-embedded delta postings, and
-  *     df/N are recomputed exactly from the merged scan — so scores equal a
+  *     index is immutable, and every search reads one `LiveView` snapshot of
+  *     it — base postings minus superseded docs, the changed docs embedded
+  *     in executors, and N and df corrected exactly — so scores equal a
   *     from-scratch reference engine over the same live docs;
   *   - `compact()` folds deltas into a fresh base (distributed build) and
   *     re-seals the log seq;
   *   - `search(query, limit)` = embed query → disjunctive candidates →
-  *     f32 score fold in query-occurrence order → top-k → contents join
-  *     (`search.rs:118-132`), all as one distributed plan.
+  *     f32 score fold in query-occurrence order (`Bm25Math.score`) → top-k →
+  *     contents join (`search.rs:118-132`). A limited search runs block-max
+  *     WAND over the base and scores the changed docs on the driver; an
+  *     unlimited one, or any search once more than `ChurnCutoff` docs have
+  *     changed since the base, scores every live candidate.
   */
 final class SearchEngine private[api] (
     @transient private val spark: SparkSession,
@@ -54,8 +58,6 @@ final class SearchEngine private[api] (
     * manifest-versioned knob would let it scale with the corpus).
     */
   private val DocstoreBuckets = 16
-  // superseded sets up to this size take the collected-IN probe path
-  private val MaxInProbe = 10000
 
   /** Child-entry names of a log dir, via the path's OWN filesystem (local,
     * hdfs://, s3a://, …) — a java.io.File listing would return null for any
@@ -270,12 +272,12 @@ final class SearchEngine private[api] (
   /** The frozen avgdl (fit at build / supplied via withAvgdl); upserts drift
     * it, exactly as the reference documents (`search.rs:78-81`).
     */
-  def avgdl: Float =
-    fixedAvgdl.orElse(baseIndex.map(_.manifest.avgdl)).getOrElse(Embedder.FallbackAvgdl)
+  def avgdl: Float = avgdlOf(baseIndex)
 
-  private def embedder = new Embedder(Bm25Params(k1, b, avgdl), tokenizer)
+  private def avgdlOf(base: Option[Bm25Index]): Float =
+    fixedAvgdl.orElse(base.map(_.manifest.avgdl)).getOrElse(Embedder.FallbackAvgdl)
 
-  def surrogate(key: String): Long = FxHash.hash64(key) & Long.MaxValue
+  def surrogate(key: String): Long = SearchEngine.surrogate(key)
 
   // ---------------------------------------------------------------- mutation
 
@@ -293,7 +295,7 @@ final class SearchEngine private[api] (
   def upsertBatch(docs: Dataset[Doc]): Unit = {
     val seq = nextSeq
     writeLog(docs.mapPartitions { it =>
-      it.map(d => LogRow(FxHash.hash64(d.id) & Long.MaxValue, d.id, d.contents, seq, tombstone = false))
+      it.map(d => LogRow(SearchEngine.surrogate(d.id), d.id, d.contents, seq, tombstone = false))
     }.toDF())
     nextSeq = seq + 1
   }
@@ -305,7 +307,7 @@ final class SearchEngine private[api] (
   def removeBatch(ids: Dataset[String]): Unit = {
     val seq = nextSeq
     writeLog(ids.mapPartitions { it =>
-      it.map(k => LogRow(FxHash.hash64(k) & Long.MaxValue, k, "", seq, tombstone = true))
+      it.map(k => LogRow(SearchEngine.surrogate(k), k, "", seq, tombstone = true))
     }.toDF())
     nextSeq = seq + 1
   }
@@ -318,13 +320,16 @@ final class SearchEngine private[api] (
 
   // ---------------------------------------------------------------- doc read
 
+  /** Latest-seq-wins: each doc_id's newest row of `log`, tombstones kept. */
+  private def latestRows(log: DataFrame): DataFrame =
+    log.withColumn("rn", row_number().over(Window.partitionBy($"doc_id").orderBy($"seq".desc)))
+      .where($"rn" === 1)
+
   /** Latest-seq-wins live view of the doc store. */
   def liveDocs: Dataset[Doc] = {
     if (!logExists) return spark.emptyDataset[Doc]
-    val w = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id").orderBy($"seq".desc)
-    spark.read.parquet(logPath)
-      .withColumn("rn", row_number().over(w))
-      .where($"rn" === 1 && !$"tombstone")
+    latestRows(spark.read.parquet(logPath))
+      .where(!$"tombstone")
       .select($"key".as("id"), $"contents")
       .as[Doc]
   }
@@ -336,7 +341,7 @@ final class SearchEngine private[api] (
   def get(id: String): Option[Doc] = {
     if (!logExists) return None
     pointRows(id)
-      .where($"rn" === 1 && !$"tombstone")
+      .where(!$"tombstone")
       .select($"key".as("id"), $"contents")
       .as[Doc].collect().headOption
   }
@@ -348,14 +353,11 @@ final class SearchEngine private[api] (
     */
   private[graft] def pointRows(id: String): DataFrame = {
     val sid = surrogate(id)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id").orderBy($"seq".desc)
     val pruned =
       if (bucketedLog)
         spark.read.parquet(logPath).where($"bucket" === sid % DocstoreBuckets)
       else spark.read.parquet(logPath)
-    pruned
-      .where($"doc_id" === sid && $"key" === id)
-      .withColumn("rn", row_number().over(w))
+    latestRows(pruned.where($"doc_id" === sid && $"key" === id))
   }
 
   def iter(): Dataset[Doc] = liveDocs
@@ -369,15 +371,28 @@ final class SearchEngine private[api] (
     */
   def buildBase(cfg: IndexBuildConfig = IndexBuildConfig(numShards = 4, shardGroups = 2),
                 avgdlOverride: Option[Float] = None): Unit = {
-    val corpus = liveDocs.mapPartitions { it =>
-      it.map(d => CorpusDoc(FxHash.hash64(d.id) & Long.MaxValue, d.contents))
-    }
-    val n = corpus.count()
-    val distinctIds = corpus.select($"doc_id").distinct().count()
-    require(n == distinctIds, s"doc key hash collision: $n docs, $distinctIds distinct surrogates")
-    IndexBuilder.build(spark, corpus, tokenizer, indexPath, cfg,
-      Map("source" -> logPath, "rows" -> n.toString), avgdlOverride)
+    requireDistinctSurrogates()
+    IndexBuilder.build(spark, liveCorpus, tokenizer, indexPath, cfg,
+      Map("source" -> logPath), avgdlOverride)
     sealBase()
+  }
+
+  /** The live docs keyed by surrogate, for a fresh build. */
+  private def liveCorpus: Dataset[CorpusDoc] =
+    liveDocs.mapPartitions(_.map(d => CorpusDoc(SearchEngine.surrogate(d.id), d.contents)))
+
+  /** Fails when two keys in the log share a surrogate: latest-seq-wins per
+    * doc_id would keep one of them and drop the other without a trace.
+    */
+  private def requireDistinctSurrogates(): Unit = if (logExists) {
+    val clash = spark.read.parquet(logPath).groupBy($"doc_id")
+      .agg(min($"key").as("a"), max($"key").as("b"))
+      .where($"a" =!= $"b")
+      .limit(1).as[(Long, String, String)].collect()
+    clash.headOption.foreach { case (id, a, b) =>
+      throw new IllegalArgumentException(
+        s"doc keys '$a' and '$b' share the surrogate doc id $id; the engine cannot hold both")
+    }
   }
 
   /** Log seq covered by the current base (recorded at build). */
@@ -391,239 +406,118 @@ final class SearchEngine private[api] (
   private def sealBase(): Unit =
     Checkpoints.commit(indexPath, "base_seq", Map("seq" -> (nextSeq - 1)))
 
-  /** Live docs newer than the base, plus all doc ids superseded since — as
-    * DATASETS: delta contents are embedded in executors and tombstones are
-    * applied via broadcast anti-join, so an upsert burst between compactions
-    * never funnels through the driver.
-    */
-  /** Latest post-base log row per doc — (doc_id, tombstone, contents).
-    * Filter seq > baseSeq BEFORE the window (provably equivalent: a doc
+  /** Log seq the base covers; -1 without a base. */
+  private def baseSeq: Long = if (baseExists) builtSeqMarker else -1L
+
+  /** Latest post-marker log row per doc — (doc_id, tombstone, contents).
+    * Filter seq > marker BEFORE the window (provably equivalent: a doc
     * with any post-base row has its latest row post-base, and a doc with
     * none contributes nothing either way) — so the delta path scans only
     * post-base parquet row groups (seq min/max stats prune the sealed
     * bulk) instead of windowing the entire log per search.
     */
-  private def changedState(): DataFrame = {
-    val baseSeq = if (baseExists) builtSeqMarker else -1L
-    // fast path: the base covers every appended row → no deltas, zero jobs
-    if (!logExists || nextSeq - 1 <= baseSeq)
-      return spark.emptyDataset[(Long, Boolean, String)]
-        .toDF("doc_id", "tombstone", "contents")
-    val w = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id").orderBy($"seq".desc)
-    spark.read.parquet(logPath)
-      .where($"seq" > baseSeq)
-      .withColumn("rn", row_number().over(w)).where($"rn" === 1)
+  private def changedState(marker: Long): DataFrame =
+    latestRows(spark.read.parquet(logPath).where($"seq" > marker))
       .select($"doc_id", $"tombstone", $"contents")
-  }
 
+  /** Live docs newer than the base, and every doc id changed since, as
+    * Datasets (compaction folds them into a fresh base).
+    */
   private[graft] def deltaState(): (Dataset[(Long, String)], DataFrame) = {
-    val changed = changedState()
+    val marker = baseSeq
+    val changed =
+      if (pendingPast(marker)) changedState(marker)
+      else spark.emptyDataset[(Long, Boolean, String)].toDF("doc_id", "tombstone", "contents")
     val live = changed.where(!$"tombstone")
       .select($"doc_id", $"contents").as[(Long, String)]
     (live, changed.select($"doc_id"))
   }
 
-  /** Superseded-set membership probes go against the sorted doc-id sidecar
-    * when the base has one (fresh builds and compactions write it): an
-    * 8-byte column in doc_id order, so the common small-delta case is a
-    * handful of stats-pruned row groups instead of a full forward scan per
-    * search. Exposed for the plan audit.
-    */
-  private[graft] def baseMembershipTable: DataFrame = {
-    val sidecar = new java.io.File(s"$indexPath/docids")
-    if (sidecar.exists()) spark.read.parquet(s"$indexPath/docids")
-    else spark.read.parquet(s"$indexPath/forward").select($"doc_id") // pre-sidecar index dirs
-  }
-
-  /** Count of `ids` present in the base. Small sets (the normal churn
-    * between compactions) go through a collected IN filter — pushed into
-    * the parquet scan of the sorted sidecar — and only a pathologically
-    * large superseded set falls back to the broadcast semi-join.
-    */
-  private[graft] def countInBase(ids: DataFrame): Long = {
-    val small = ids.select($"doc_id").limit(MaxInProbe + 1).collect().map(_.getLong(0))
-    if (small.length <= MaxInProbe) countInBase(small)
-    else
-      baseMembershipTable
-        .join(broadcast(ids.select($"doc_id")), Seq("doc_id"), "left_semi")
-        .count()
-  }
-
-  /** Pre-collected form: the WAND path already holds the superseded set on
-    * the driver, so it must not re-run the delta-log query to collect it
-    * again (one saved Spark job per live search).
-    */
-  private[graft] def countInBase(ids: Array[Long]): Long =
-    if (ids.isEmpty) 0L
-    else if (ids.length <= MaxInProbe)
-      baseMembershipTable.where($"doc_id".isin(ids.map(Long.box): _*)).count()
-    else {
-      val df = spark.createDataset(ids.toSeq).toDF("doc_id")
-      baseMembershipTable.join(broadcast(df), Seq("doc_id"), "left_semi").count()
-    }
-
-  private def liveN(baseN: Long, supersededIds: DataFrame, deltaLiveCount: Long): Long = {
-    // N = base docs − superseded ids that existed in base + live delta docs.
-    val inBase: Long = if (baseExists) countInBase(supersededIds) else 0L
-    baseN - inBase + deltaLiveCount
-  }
-
   // ----------------------------------------------------------------- search
+
+  /** True when log rows exist past the built base (the live view differs
+    * from the base index).
+    */
+  def hasPendingDeltas: Boolean = pendingPast(baseSeq)
+
+  private def pendingPast(marker: Long): Boolean = logExists && nextSeq - 1 > marker
+
+  /** This query's snapshot of the live view (see `LiveView`): the base is
+    * opened and its seq marker read once.
+    */
+  private[graft] def liveView(distinctTerms: Array[Long]): LiveView = {
+    val base = baseIndex
+    val marker = if (base.isDefined) builtSeqMarker else -1L
+    new LiveView(spark, base, distinctTerms,
+      new Embedder(Bm25Params(k1, b, avgdlOf(base)), tokenizer),
+      if (pendingPast(marker)) Some(changedState(marker)) else None)
+  }
 
   /** The live-view query state for a set of distinct query terms: all
     * postings of live documents matching any term (base minus superseded,
     * plus executor-embedded deltas), and the live document count N.
-    * Public so callers (e.g. the driver-oracle catalog) can score the live
-    * view in alternate precisions; `search` consumes it in reference f32.
+    * Public so callers can score the live view in alternate precisions;
+    * `search` consumes it in reference f32.
     */
-  /** True when log rows exist past the built base (the live view differs
-    * from the base index). Exposed so callers can route df lookups to the
-    * termstats table when the base IS the live view (post-compaction):
-    * with zero deltas and zero superseded docs, df_live(t) = df_base(t)
-    * exactly (one posting per (term, doc), so the termstats block-count
-    * sum equals the distinct-doc count).
-    */
-  def hasPendingDeltas: Boolean =
-    logExists && nextSeq - 1 > (if (baseExists) builtSeqMarker else -1L)
-
   def liveQueryState(distinctTerms: Array[Long]): (Dataset[Posting], Long) = {
-    val emb = embedder
-    val qset = distinctTerms.toSet
-    val (deltaLive, supersededIds) = deltaState()
-    val hasDeltas = logExists && nextSeq - 1 > (if (baseExists) builtSeqMarker else -1L)
-
-    // r6 optimization: when the post-base churn is small (the normal case
-    // between compactions) ONE collect of (doc_id, tombstone) serves the
-    // superseded-id exclusion, the delta-live count AND the liveN base
-    // membership probe — formerly three separate jobs (deltaLive.count, a
-    // superseded-id collect, the sidecar count) plus a re-execution of the
-    // windowed log subplan inside the anti-join's broadcast build. A
-    // pathologically large churn set falls back to the previous
-    // anti-join + count shape unchanged.
-    val smallChanged: Option[Array[(Long, Boolean)]] =
-      if (!hasDeltas) None
-      else {
-        val rows = changedState().select($"doc_id", $"tombstone")
-          .limit(MaxInProbe + 1).as[(Long, Boolean)].collect()
-        if (rows.length <= MaxInProbe) Some(rows) else None
-      }
-
-    val base: Dataset[Posting] =
-      baseIndex.map(_.postingsFor(distinctTerms)).getOrElse(spark.emptyDataset[Posting])
-    val baseFiltered: Dataset[Posting] =
-      if (!hasDeltas) base
-      else smallChanged match {
-        case Some(rows) if rows.isEmpty => base
-        case Some(rows) =>
-          // same exclusion set as the anti-join, as a literal filter — the
-          // windowed log subplan no longer re-executes inside a broadcast
-          base.where(!$"doc_id".isin(rows.map(r => Long.box(r._1)).toSeq: _*)).as[Posting]
-        case None =>
-          base.join(broadcast(supersededIds), Seq("doc_id"), "left_anti").as[Posting]
-      }
-    // delta docs are embedded IN EXECUTORS (no driver collect): tokenize,
-    // keep only postings whose term is queried
-    val deltaCands: Dataset[Posting] = deltaLive.mapPartitions { it =>
-      it.flatMap { case (docId, contents) =>
-        val (terms, tfs, dl) = emb.termFrequencies(contents)
-        terms.indices.collect { case i if qset.contains(terms(i)) => Posting(docId, terms(i), tfs(i), dl) }
-      }
-    }
-    val baseN = baseIndex.map(_.manifest.nDocs).getOrElse(0L)
-    val nLive =
-      if (!hasDeltas) baseN
-      else smallChanged match {
-        case Some(rows) =>
-          val inBase = if (baseExists) countInBase(rows.map(_._1)) else 0L
-          baseN - inBase + rows.count(!_._2)
-        case None => liveN(baseN, supersededIds, deltaLive.count())
-      }
-    (baseFiltered.union(deltaCands), nLive)
+    val view = liveView(distinctTerms)
+    (view.postings, view.n)
   }
 
   /** Top-`limit` search ((score desc, key asc)-deterministic; `None` returns
     * every doc sharing ≥1 query term, like the reference's unlimited mode).
     *
-    * With a limit and a base index, the base side runs block-max WAND with
-    * LIVE idfs and the superseded set excluded, while the (small) delta side
-    * is scored exhaustively and the two top-k lists merge — so a busy engine
-    * between compactions no longer pays full candidate scoring on hot terms.
-    * Results are bit-identical to the exhaustive live scorer (gated in
-    * SearchEngineSpec). Falls back to the exhaustive path for unlimited
-    * searches or when the superseded set is too large to broadcast.
+    * With a limit, a base index and at most `ChurnCutoff` changed docs, the
+    * base side runs block-max WAND with the live idfs and the superseded
+    * docs excluded, the changed docs are scored on the driver, and the two
+    * top-k lists merge — results are bit-identical to the exhaustive live
+    * scorer (gated in SearchEngineSpec). Otherwise every live candidate is
+    * scored.
     */
   def search(query: String, limit: Option[Int] = None): Seq[SearchResult] = {
     val qOcc = tokenizer.tokenize(query).map(FxHash.hash32u)
     if (qOcc.isEmpty) return Seq.empty
-    val distinctTerms = qOcc.distinct
-
-    if (limit.isDefined && baseExists) {
-      searchWandLive(qOcc, distinctTerms, limit.get) match {
-        case Some(hits) => return resolveContents(hits)
-        case None       => // fall through to the exhaustive path
-      }
-    }
-
-    val (candsRaw, nLive) = liveQueryState(distinctTerms)
-    val cands = candsRaw.persist()
-    val emb = embedder
-    try {
-      // exact live df per query term + live N (mirrors scorer.rs:99-107 state)
-      val dfLive: Map[Long, Long] = cands.groupBy($"term")
-        .agg(countDistinct($"doc_id").as("df")).as[(Long, Long)].collect().toMap
-      if (dfLive.isEmpty) return Seq.empty
-
-      val idfs: Map[Long, Float] = distinctTerms.iterator.map { t =>
-        t -> graft.bm25.Bm25Math.idf(nLive, dfLive.getOrElse(t, 0L))
-      }.toMap
-
-      val qOccL = qOcc
-      val scored = cands.groupByKey(_.doc_id).mapGroups { (docId, ps) =>
-        val values = new java.util.HashMap[Long, Float](16)
-        ps.foreach(p => values.putIfAbsent(p.term, emb.weight(p.tf, p.dl)))
-        var score = 0.0f
-        var i = 0
-        while (i < qOccL.length) {
-          val v = values.get(qOccL(i))
-          if (v != 0.0f) score += idfs(qOccL(i)) * v
-          i += 1
+    val view = liveView(qOcc.distinct)
+    if (view.df.values.forall(_ <= 0L)) return Seq.empty
+    val idfs = view.idfs
+    val emb = view.emb
+    val hits: Seq[(Long, Float)] = (limit, view.base, view.churned) match {
+      case (Some(k), Some(idx), Some(churned)) =>
+        val present = view.terms.filter(view.baseDf.contains)
+        val baseHits =
+          if (present.isEmpty) Array.empty[ScoredDoc]
+          else idx.wandTopK(qOcc, present, idfs, k, churned.map(_.doc_id).toSet, Some(wandSkippedBlocks))
+            .orderBy($"score".desc, $"doc_id".asc).limit(k)
+            .as[ScoredDoc].collect()
+        val deltaHits = churned.collect { case c if c.postings.nonEmpty =>
+          ScoredDoc(c.doc_id, SearchEngine.scoreOf(qOcc, c.postings.iterator, emb, idfs))
         }
-        ScoredDoc(docId, score)
-      }
-      val sorted = scored.orderBy($"score".desc, $"doc_id".asc)
-      val hits = limit.map(sorted.limit).getOrElse(sorted).as[ScoredDoc].collect()
-      resolveContents(hits.toSeq.map(h => (h.doc_id, h.score)))
-    } finally cands.unpersist()
+        // a doc lives on exactly one side (superseded base docs are
+        // excluded), so a plain merge is exact
+        (baseHits ++ deltaHits).map(h => (h.doc_id, h.score))
+          .sortBy { case (id, s) => (-s, id) }.take(k).toSeq
+      case _ =>
+        val sorted = view.postings.groupByKey(_.doc_id)
+          .mapGroups((docId, ps) => ScoredDoc(docId, SearchEngine.scoreOf(qOcc, ps, emb, idfs)))
+          .orderBy($"score".desc, $"doc_id".asc)
+        limit.map(sorted.limit).getOrElse(sorted).as[ScoredDoc].collect()
+          .map(h => (h.doc_id, h.score)).toSeq
+    }
+    resolveContents(hits)
   }
 
-  /** Contents join for scored hits (broadcast semi-join, not isin: an
-    * unlimited search can return many ids and a literal In list would blow
-    * up the plan).
-    *
-    * The semi-join runs BEFORE the latest-seq window: only the k hit docs'
-    * log rows are windowed (k groups in, k rows out), instead of ranking
-    * the entire docstore log and then keeping k docs — the r3 judge's
-    * finding #1 for the contents side. Equivalent because latest-wins is
-    * computed per doc_id, and the semi-join keeps every row of each kept
-    * doc_id.
+  /** Contents join for scored hits. The id filter runs BEFORE the
+    * latest-seq window: only the hit docs' log rows are windowed (k groups
+    * in, k rows out), instead of ranking the entire docstore log and then
+    * keeping k docs — the r3 judge's finding #1 for the contents side.
+    * Equivalent because latest-wins is computed per doc_id, and the filter
+    * keeps every row of each kept doc_id.
     */
   private def resolveContents(hits: Seq[(Long, Float)]): Seq[SearchResult] = {
     if (hits.isEmpty || !logExists) return Seq.empty
-    val idsDf = spark.createDataset(hits.map(_._1)).toDF("doc_id")
-    val w = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id").orderBy($"seq".desc)
-    // For a top-k-sized hit list, additionally push an In(doc_id) predicate
-    // into the scan itself: the semi-join bounds what the window sees, the
-    // pushed filter bounds what the scan READS (row-group stats /
-    // dictionary pruning). Unlimited searches skip the literal list (an
-    // unbounded In would bloat the plan) and rely on the semi-join alone.
-    val log0 = spark.read.parquet(logPath)
-    val log =
-      if (hits.length <= 1024) log0.where($"doc_id".isin(hits.map(h => Long.box(h._1)): _*))
-      else log0
-    val contents = log
-      .join(broadcast(idsDf), Seq("doc_id"), "left_semi")
-      .withColumn("rn", row_number().over(w))
-      .where($"rn" === 1 && !$"tombstone")
+    val log = SearchEngine.docIdsIn(spark.read.parquet(logPath), hits.map(_._1).toArray, keep = true)
+    val contents = latestRows(log)
+      .where(!$"tombstone")
       .select($"doc_id", $"key", $"contents")
       .as[(Long, String, String)].collect()
       .map(r => r._1 -> (r._2, r._3)).toMap
@@ -631,107 +525,6 @@ final class SearchEngine private[api] (
     hits.flatMap { case (docId, score) =>
       contents.get(docId).map { case (key, c) => SearchResult(key, c, score) }
     }
-  }
-
-  /** Hybrid top-k over the live view: WAND-pruned base + exhaustively
-    * scored deltas, merged. Returns None when the superseded set is too
-    * large to broadcast safely (caller falls back to exhaustive).
-    */
-  private def searchWandLive(qOcc: Array[Long], distinctTerms: Array[Long],
-                             k: Int): Option[Seq[(Long, Float)]] = {
-    val idx = baseIndex.get
-    val (deltaLive, supersededIds) = deltaState()
-    val baseSeq = builtSeqMarker
-    val hasDeltas = logExists && nextSeq - 1 > baseSeq
-
-    val superseded: Set[Long] =
-      if (!hasDeltas) Set.empty
-      else {
-        val ids = supersededIds.limit(100001).as[Long].collect()
-        if (ids.length > 100000) return None // too big to broadcast — exhaustive
-        ids.toSet
-      }
-
-    // ---- live df/N without scanning the base candidates -----------------
-    // df_live(t) = df_base(t) − |superseded∩base docs containing t|
-    //            + |live delta docs containing t|
-    val dfsBase = idx.termDfs(distinctTerms)
-    val supCounts: Map[Long, Long] =
-      if (superseded.isEmpty || !baseExists) Map.empty
-      else {
-        val supDf = spark.createDataset(superseded.toSeq).toDF("doc_id")
-        // additionally push the literal id list into the scan when small
-        // (stats/dictionary pruning); the semi-join stays as the row filter
-        val fwd0 = spark.read.parquet(s"$indexPath/forward")
-        val fwd =
-          if (superseded.size <= 1024)
-            fwd0.where($"doc_id".isin(superseded.toSeq.map(Long.box): _*))
-          else fwd0
-        fwd.join(broadcast(supDf), Seq("doc_id"), "left_semi")
-          .select(explode($"terms").as("term"))
-          .where($"term".isin(distinctTerms.map(Long.box): _*))
-          .groupBy($"term").count().as[(Long, Long)].collect().toMap
-      }
-    val emb = embedder
-    val qset = distinctTerms.toSet
-    val deltaCands: Dataset[Posting] =
-      if (!hasDeltas) spark.emptyDataset[Posting]
-      else deltaLive.mapPartitions { it =>
-        it.flatMap { case (docId, contents) =>
-          val (terms, tfs, dl) = emb.termFrequencies(contents)
-          terms.indices.collect { case i if qset.contains(terms(i)) => Posting(docId, terms(i), tfs(i), dl) }
-        }
-      }.persist()
-    try {
-      val deltaCounts: Map[Long, Long] =
-        if (!hasDeltas) Map.empty
-        else deltaCands.groupBy($"term").agg(countDistinct($"doc_id").as("df"))
-          .as[(Long, Long)].collect().toMap
-      val baseN = idx.manifest.nDocs
-      val nLive =
-        if (!hasDeltas) baseN
-        else baseN - countInBase(superseded.toArray) + deltaLive.count()
-      val dfLive: Map[Long, Long] = distinctTerms.iterator.map { t =>
-        t -> (dfsBase.getOrElse(t, 0L) - supCounts.getOrElse(t, 0L) + deltaCounts.getOrElse(t, 0L))
-      }.toMap
-      if (dfLive.values.forall(_ <= 0L)) return Some(Seq.empty)
-      val idfs: Map[Long, Float] = distinctTerms.iterator.map { t =>
-        t -> graft.bm25.Bm25Math.idf(nLive, dfLive(t))
-      }.toMap
-
-      // ---- base side: block-max WAND with live idfs, superseded excluded
-      val present = distinctTerms.filter(dfsBase.contains)
-      val baseHits: Array[(Long, Float)] =
-        if (present.isEmpty) Array.empty
-        else idx.wandTopKLive(qOcc, present, idfs, k, superseded, Some(wandSkippedBlocks))
-          .orderBy($"score".desc, $"doc_id".asc).limit(k)
-          .as[ScoredDoc].collect().map(h => (h.doc_id, h.score))
-
-      // ---- delta side: exhaustive f32 fold over the (small) delta docs --
-      val qOccL = qOcc
-      val idfB = idfs
-      val deltaHits: Array[(Long, Float)] =
-        if (!hasDeltas) Array.empty
-        else deltaCands.groupByKey(_.doc_id).mapGroups { (docId, ps) =>
-          val values = new java.util.HashMap[Long, Float](16)
-          ps.foreach(p => values.putIfAbsent(p.term, emb.weight(p.tf, p.dl)))
-          var score = 0.0f
-          var i = 0
-          while (i < qOccL.length) {
-            val v = values.get(qOccL(i))
-            if (v != 0.0f) score += idfB(qOccL(i)) * v
-            i += 1
-          }
-          ScoredDoc(docId, score)
-        }.orderBy($"score".desc, $"doc_id".asc).limit(k)
-          .as[ScoredDoc].collect().map(h => (h.doc_id, h.score))
-
-      // a doc lives on exactly one side (superseded base docs are excluded),
-      // so a plain merge is exact
-      Some((baseHits ++ deltaHits)
-        .sortBy { case (id, s) => (-s, id) }
-        .take(k).toSeq)
-    } finally { deltaCands.unpersist(): Unit }
   }
 
   /** Distributed compaction: with an existing base, folds pending deltas in
@@ -750,10 +543,8 @@ final class SearchEngine private[api] (
       val deltaCorpus = deltaLive.map { case (id, c) => CorpusDoc(id, c) }
       Compactor.merge(spark, indexPath, tmp, deltaCorpus, supersededIds, tokenizer, cfg)
     } else {
-      val corpus = liveDocs.mapPartitions { it =>
-        it.map(d => CorpusDoc(FxHash.hash64(d.id) & Long.MaxValue, d.contents))
-      }
-      IndexBuilder.build(spark, corpus, tokenizer, tmp, cfg,
+      requireDistinctSurrogates()
+      IndexBuilder.build(spark, liveCorpus, tokenizer, tmp, cfg,
         Map("source" -> logPath), Some(frozenAvgdl))
     }
     // Swap with java.nio Files.move (throws on failure — a silent renameTo
@@ -798,10 +589,8 @@ final class SearchEngine private[api] (
     */
   private def compactLog(): Unit = {
     if (!logExists) return
-    val w = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id").orderBy($"seq".desc)
-    val live = spark.read.parquet(logPath)
-      .withColumn("rn", row_number().over(w))
-      .where($"rn" === 1 && !$"tombstone")
+    val live = latestRows(spark.read.parquet(logPath))
+      .where(!$"tombstone")
       .select($"doc_id", $"key", $"contents", $"seq", $"tombstone")
     val tmp = s"$dir/docstore_compacting"
     deleteRecursively(new java.io.File(tmp))
@@ -834,6 +623,39 @@ final class SearchEngine private[api] (
 }
 
 object SearchEngine {
+
+  /** Changed docs past the base up to which a search collects them to the
+    * driver (WAND's exclusion set, driver-side delta scoring); past it the
+    * live view stays distributed and limited searches score exhaustively.
+    */
+  val ChurnCutoff = 100000
+
+  /** Doc-id sets up to this size filter a scan as one literal IN list
+    * (pushed into parquet); larger ones are broadcast and joined.
+    */
+  val MaxInLiterals = 10000
+
+  /** The Long doc id a key is stored under (FxHash64, sign bit cleared). */
+  def surrogate(key: String): Long = FxHash.hash64(key) & Long.MaxValue
+
+  /** `table` restricted to the doc ids in `ids` (`keep`), or cleared of them. */
+  private[api] def docIdsIn(table: DataFrame, ids: Array[Long], keep: Boolean): DataFrame =
+    if (ids.length <= MaxInLiterals) {
+      val in = col("doc_id").isin(ids.map(Long.box): _*)
+      table.where(if (keep) in else !in)
+    } else {
+      val spark = table.sparkSession
+      import spark.implicits._
+      table.join(broadcast(ids.toSeq.toDF("doc_id")), Seq("doc_id"), if (keep) "left_semi" else "left_anti")
+    }
+
+  /** A doc's score from its postings of the query terms. */
+  private def scoreOf(qOcc: Array[Long], postings: Iterator[Posting], emb: Embedder,
+                      idfs: Map[Long, Float]): Float = {
+    val weights = new java.util.HashMap[Long, Float](16)
+    postings.foreach(p => weights.putIfAbsent(p.term, emb.weight(p.tf, p.dl)))
+    Bm25Math.score(qOcc, weights, idfs)
+  }
 
   /** `SearchEngineBuilder::with_avgdl` (`search.rs:161-171`). */
   def withAvgdl(spark: SparkSession, dir: String, avgdl: Float,

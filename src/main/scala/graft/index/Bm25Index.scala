@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.bm25.{Bm25Params, Embedder}
+import graft.bm25.{Bm25Math, Bm25Params, Embedder}
 import graft.text.{Bm25Tokenizer, Language, TextTokenizer}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,6 +11,32 @@ import org.apache.spark.sql.functions._
 final case class Posting(doc_id: Long, term: Long, tf: Int, dl: Int)
 
 final case class ScoredDoc(doc_id: Long, score: Float)
+
+/** The WAND fan-out's split of each shard's doc range [low, high), given by
+  * the shard bounds, into `perShard` sub-ranges; the last absorbs the
+  * remainder. Serializable, so the block router and the range cursors share
+  * one definition.
+  */
+private[index] final case class ShardSlices(bounds: Array[Long], perShard: Int) {
+  private def low(s: Int): Long = math.max(0L, if (s == 0) Long.MinValue else bounds(s - 1))
+  private def high(s: Int): Long = if (s >= bounds.length) Long.MaxValue else bounds(s)
+  private def width(s: Int): Long = {
+    val span = high(s) - low(s)
+    math.max(1L, (if (span < 0) Long.MaxValue else span) / perShard)
+  }
+
+  /** The sub-range of `shard` that holds `doc`. */
+  def sliceOf(shard: Int, doc: Long): Int =
+    if (perShard <= 1) 0 else math.min(perShard - 1, ((doc - low(shard)) / width(shard)).toInt)
+
+  /** Inclusive doc bounds of sub-range `r` of `shard`. */
+  def range(shard: Int, r: Int): (Long, Long) =
+    if (perShard <= 1) (Long.MinValue, Long.MaxValue)
+    else {
+      val a = low(shard) + r.toLong * width(shard)
+      (a, if (r == perShard - 1) Long.MaxValue else a + width(shard) - 1)
+    }
+}
 
 /** Distributed BM25 retrieval over a built index (SURVEY §3.1 plan):
   * driver-side query embedding (pure function, no job) → term-stat lookup
@@ -70,7 +96,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
   /** IDF exactly as `scorer.rs:99-107`: f32 throughout, df = number of docs
     * containing the term, N = total docs.
     */
-  def idf(df: Long): Float = graft.bm25.Bm25Math.idf(nDocs, df)
+  def idf(df: Long): Float = Bm25Math.idf(nDocs, df)
 
   /** df lookup for query terms: bucket-pruned termstats scan (reads only the
     * term buckets the query touches, then row-group pruning via the sorted
@@ -162,17 +188,9 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
         val idfs = new java.util.HashMap[Long, Float](16)
         rows.foreach { case (_, term, tf, dl, df) =>
           values.putIfAbsent(term, emb.weight(tf, dl))
-          idfs.putIfAbsent(term, graft.bm25.Bm25Math.idf(n, df))
+          idfs.putIfAbsent(term, Bm25Math.idf(n, df))
         }
-        var score = 0.0f
-        val occ = qOccB.value
-        var i = 0
-        while (i < occ.length) {
-          val v = values.get(occ(i)) // 0.0f when absent — adding 0f is exact
-          if (v != 0.0f) score += idfs.get(occ(i)) * v
-          i += 1
-        }
-        ScoredDoc(docId, score)
+        ScoredDoc(docId, Bm25Math.score(qOccB.value, values, t => idfs.get(t)))
       }
   }
 
@@ -185,22 +203,15 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
     * Memory is O(k + blockSize·|terms|) regardless of posting length; the
     * pruning is conservative, so results are rank- and bit-identical to the
     * exhaustive scorer (asserted in Bm25IndexSpec).
+    *
+    * `idfs` are supplied by the caller and `exclude` names doc ids to pass
+    * over unscored, so the engine runs it over its live view (live df/N,
+    * superseded docs excluded). `skipAcc` counts pruned blocks.
     */
-  /** Public live-view entry: block-max WAND over the BASE postings with
-    * caller-supplied idfs (live df/N) and a set of excluded (superseded)
-    * doc ids — the engine's between-compactions search path. `skipAcc`
-    * counts pruned blocks (test instrumentation).
-    */
-  private[graft] def wandTopKLive(qOcc: Array[Long], present: Array[Long],
-                                  idfs: Map[Long, Float], k: Int,
-                                  exclude: Set[Long],
-                                  skipAcc: Option[org.apache.spark.util.LongAccumulator]): Dataset[ScoredDoc] =
-    wandTopK(qOcc, present, idfs, k, exclude, skipAcc)
-
-  private def wandTopK(qOcc: Array[Long], present: Array[Long],
-                       idfs: Map[Long, Float], k: Int,
-                       exclude: Set[Long],
-                       skipAcc: Option[org.apache.spark.util.LongAccumulator]): Dataset[ScoredDoc] = {
+  private[graft] def wandTopK(qOcc: Array[Long], present: Array[Long],
+                              idfs: Map[Long, Float], k: Int,
+                              exclude: Set[Long],
+                              skipAcc: Option[org.apache.spark.util.LongAccumulator]): Dataset[ScoredDoc] = {
     val emb = embedder
     val qOccB = spark.sparkContext.broadcast(qOcc)
     val idfB = spark.sparkContext.broadcast(idfs)
@@ -215,21 +226,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
     // it overlaps (cursors filter decoded postings to their range), so the
     // task count scales with the cluster instead of the shard count.
     val numShards = manifest.numShards
-    val rangesPerShard = wandFanoutRangesPerShard
-    val shardBounds = manifest.shardBounds
-    def shardLow(s: Int): Long =
-      math.max(0L, if (s == 0) Long.MinValue else shardBounds(s - 1))
-    def shardHigh(s: Int): Long =
-      if (s >= shardBounds.length) Long.MaxValue else shardBounds(s)
-    // [low, high) split into R slices; the last slice absorbs the remainder
-    def rangeOf(shard: Int, doc: Long): Int = {
-      if (rangesPerShard <= 1) return 0
-      val lo = shardLow(shard)
-      val span = shardHigh(shard) - lo
-      val width = math.max(1L, (if (span < 0) Long.MaxValue else span) / rangesPerShard)
-      math.min(rangesPerShard - 1, ((doc - lo) / width).toInt)
-    }
-    val rps = rangesPerShard
+    val slices = ShardSlices(manifest.shardBounds, wandFanoutRangesPerShard)
     val blocks = spark.read.parquet(s"$indexDir/postings")
       .where($"term".isin(present: _*))
       .select($"shard", $"term", $"block", $"cnt", $"max_tf", $"min_dl",
@@ -237,16 +234,15 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
       .as[(Int, Long, Int, Int, Int, Int, Long, Long, Array[Byte], Array[Byte], Array[Byte])]
       .flatMap { case (shard, term, block, cnt, maxTf, minDl, minDoc, maxDoc, d, t, l) =>
         val _ = block // block ids are per build-slice; readers order by min_doc
-        val r0 = rangeOf(shard, minDoc)
-        val r1 = rangeOf(shard, maxDoc)
+        val r0 = slices.sliceOf(shard, minDoc)
+        val r1 = slices.sliceOf(shard, maxDoc)
         (r0 to r1).iterator.map(r =>
           (shard, r, term, minDoc, cnt, maxTf, minDl, d, t, l))
       }
       .toDF("shard", "rng", "term", "min_doc", "cnt", "max_tf", "min_dl", "docs", "tfs", "dls")
-      .repartition(math.max(numShards * rps, spark.sparkContext.defaultParallelism),
+      .repartition(math.max(numShards * slices.perShard, spark.sparkContext.defaultParallelism),
         $"shard", $"rng")
       .as[(Int, Int, Long, Long, Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])]
-    val boundsB = spark.sparkContext.broadcast(shardBounds)
     blocks.mapPartitions { it =>
       val occ = qOccB.value
       val idfMap = idfB.value
@@ -259,29 +255,12 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
           if (a.score != b.score) java.lang.Float.compare(a.score, b.score)
           else java.lang.Long.compare(b.doc_id, a.doc_id)) // min-heap on (score, -doc_id)
 
-      // per-(shard, sub-range) doc bounds, recomputed from the broadcast
-      // shard bounds (pure function of (shard, rng))
-      val boundsArr = boundsB.value
-      def pShardLow(s: Int): Long =
-        math.max(0L, if (s == 0) Long.MinValue else boundsArr(s - 1))
-      def pShardHigh(s: Int): Long =
-        if (s >= boundsArr.length) Long.MaxValue else boundsArr(s)
-      def pRange(s: Int, r: Int): (Long, Long) = { // inclusive [lo, hi]
-        if (rps <= 1) return (Long.MinValue, Long.MaxValue)
-        val lo = pShardLow(s)
-        val span = pShardHigh(s) - lo
-        val width = math.max(1L, (if (span < 0) Long.MaxValue else span) / rps)
-        val a = lo + r.toLong * width
-        val b = if (r == rps - 1) Long.MaxValue else a + width - 1
-        (a, b)
-      }
-
       // (shard, rng) → term → blocks ordered by block index
       val byGroup = new java.util.HashMap[Long, java.util.HashMap[Long, java.util.ArrayList[(Long, Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])]]]()
       val groupRange = new java.util.HashMap[Long, (Long, Long)]()
       it.foreach { case (shard, rng, term, minDoc, cnt, maxTf, minDl, d, t, l) =>
         val key = (shard.toLong << 32) | (rng.toLong & 0xFFFFFFFFL)
-        groupRange.computeIfAbsent(key, _ => pRange(shard, rng))
+        groupRange.computeIfAbsent(key, _ => slices.range(shard, rng))
         byGroup.computeIfAbsent(key, _ => new java.util.HashMap())
           .computeIfAbsent(term, _ => new java.util.ArrayList())
           .add((minDoc, cnt, maxTf, minDl, d, t, l))
@@ -393,15 +372,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
                 c.advance(thr)
               }
             }
-            // f32 fold in query-occurrence order (scorer.rs:109-123)
-            var score = 0.0f
-            var i = 0
-            while (i < occ.length) {
-              val v = weights.get(occ(i))
-              if (v != 0.0f) score += idfMap(occ(i)) * v
-              i += 1
-            }
-            heap.add(ScoredDoc(minDoc, score))
+            heap.add(ScoredDoc(minDoc, Bm25Math.score(occ, weights, idfMap)))
             if (heap.size > k) heap.poll(): Unit
           }
         }
@@ -436,16 +407,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
           weights.putIfAbsent(row.terms(i), embedder.weight(row.tfs(i), row.dl))
           i += 1
         }
-        var score = 0.0f
-        i = 0
-        while (i < qOcc.length) {
-          val t = qOcc(i)
-          val v = weights.get(t)
-          if (v != 0.0f) score += idf(dfs.getOrElse(t, 0L)) * v
-          else score += idf(dfs.getOrElse(t, 0L)) * 0.0f // exact no-op, kept for clarity
-          i += 1
-        }
-        score
+        Bm25Math.score(qOcc, weights, t => idf(dfs.getOrElse(t, 0L)))
       }
     }
   }

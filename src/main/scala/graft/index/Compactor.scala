@@ -75,8 +75,6 @@ object Compactor {
     val baseFwd = spark.read.parquet(s"$baseDir/forward").as[ForwardRow]
     val keptFwd = baseFwd.join(broadcast(drop), Seq("doc_id"), "left_anti").as[ForwardRow]
     keptFwd.union(deltaFwd).write.mode(SaveMode.Overwrite).parquet(s"$outDir/forward")
-    // sorted doc-id sidecar, same as a fresh build (liveN membership probes)
-    IndexBuilder.writeDocIds(spark, s"$outDir/forward", s"$outDir/docids", eff.numShards)
 
     val statRow = spark.read.parquet(s"$outDir/forward")
       .agg(count(lit(1)), coalesce(sum($"dl"), lit(0L))).head()

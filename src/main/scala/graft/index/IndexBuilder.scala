@@ -70,20 +70,6 @@ final case class IndexBuildConfig(
   */
 object IndexBuilder {
 
-  /** Writes the sorted doc-id sidecar: the forward table's id column,
-    * range-partitioned and sorted so parquet row-group min/max stats make
-    * point/membership probes near-perfectly prunable. Shared by the fresh
-    * build and the compactor.
-    */
-  def writeDocIds(spark: SparkSession, fwdPath: String, outPath: String,
-                  partitions: Int): Unit = {
-    import spark.implicits._
-    spark.read.parquet(fwdPath).select($"doc_id")
-      .repartitionByRange(math.max(1, partitions), $"doc_id")
-      .sortWithinPartitions($"doc_id")
-      .write.mode(SaveMode.Overwrite).parquet(outPath)
-  }
-
   def tokenizerConfig(t: TextTokenizer): TokenizerConfig = t match {
     case b: Bm25Tokenizer => TokenizerConfig(b.language.name, b.normalization, b.stopwords, b.stemming)
     case _                => TokenizerConfig("custom", normalization = false, stopwords = false, stemming = false)
@@ -174,19 +160,6 @@ object IndexBuilder {
         (n, s)
       }
 
-    // --- stage 2b: sorted doc-id sidecar (concurrent, like stats) ---------
-    // An id-only table RANGE-SORTED by doc_id: membership probes (the
-    // live-view N correction semi-joins the superseded set against the base)
-    // prune to a few row groups via parquet min/max stats instead of
-    // scanning the whole forward index — 8 bytes/doc in perfectly
-    // prunable order vs wide forward rows in ingest order.
-    val docidsF: Future[Unit] =
-      if (Checkpoints.isDone(indexDir, "docids")) Future.successful(())
-      else Future {
-        IndexBuilder.writeDocIds(spark, fwdPath, s"$indexDir/docids", cfg.numShards)
-        Checkpoints.commit(indexDir, "docids", Map("seconds" -> 0))
-      }
-
     // --- stage 3: posting blocks per shard group --------------------------
     val groups = math.max(1, math.min(cfg.shardGroups, cfg.numShards))
     var encBlocks = 0L; var encBytes = 0L; var encPostings = 0L
@@ -246,7 +219,6 @@ object IndexBuilder {
 
     // --- finalize: metrics + manifest -------------------------------------
     import scala.concurrent.duration.Duration
-    Await.result(docidsF, Duration.Inf)
     val (nDocs, sumDl) = Await.result(statsF, Duration.Inf)
     val avgdl = avgdlOverride.getOrElse(
       if (nDocs == 0L) Embedder.FallbackAvgdl

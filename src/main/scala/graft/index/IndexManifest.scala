@@ -71,7 +71,8 @@ object IndexManifest {
   /** ADDITIVE layout revision: bumped when the index dir gains optional
     * sidecars (readers of older dirs still work via fallbacks, so
     * CurrentVersion — which fail-fasts — must NOT change). Cache keys that
-    * want the newest layout include this. "b" = the sorted docids sidecar.
+    * want the newest layout include this. "b" = the sorted docids sidecar,
+    * since dropped: the live view counts superseded docs on forward rows.
     */
   val LayoutRev = "b"
 

@@ -95,6 +95,15 @@ class LocalOracleSpec extends SparkTestBase {
           assert(java.lang.Float.floatToRawIntBits(gs) === java.lang.Float.floatToRawIntBits(expMap(gi)),
             s"round $round post-mutation q='$q' doc $gi")
         }
+        // limited searches (WAND over the live view) ≡ the engine's own
+        // unlimited first k, and carry the oracle's score bits
+        def bits(rs: Seq[(String, Float)]) = rs.map { case (i, x) => (i, java.lang.Float.floatToRawIntBits(x)) }
+        for (k <- Seq(1, 3)) {
+          val lim = eng.search(q, Some(k)).map(r => r.id -> r.score)
+          assert(bits(lim) === bits(got.take(k)), s"round $round post-mutation q='$q' top-$k")
+          assert(bits(lim) === bits(lim.map { case (i, _) => i -> expMap(i) }),
+            s"round $round post-mutation q='$q' top-$k vs oracle")
+        }
       }
     }
   }

@@ -454,4 +454,47 @@ class SearchEngineSpec extends SparkTestBase {
       .agg(max($"seq")).head().getLong(0)
     assert(after == trueMax + 1)
   }
+
+  test("keys whose surrogates collide fail the build instead of collapsing") {
+    // FxHash64 maps both paths to 8711491084570854815
+    val (a, b) = ("src/rust/file_1001.rust", "src/rust/file_1965.rust")
+    assert(SearchEngine.surrogate(a) === SearchEngine.surrogate(b))
+    val eng = SearchEngine.withAvgdl(spark, tmpDir("clash"), 2.0f)
+    eng.upsert(Seq(Doc(a, "first file"), Doc(b, "second file")))
+    for (build <- Seq(() => eng.buildBase(), () => eng.compact())) {
+      val ex = intercept[IllegalArgumentException](build())
+      assert(ex.getMessage.contains(a) && ex.getMessage.contains(b), ex.getMessage)
+    }
+  }
+
+  test("past the churn cutoff, limited ≡ unlimited first k ≡ a fresh engine, bit-exact") {
+    import spark.implicits._
+    val words = Array("merge", "join", "sort", "spark", "key", "fast", "scan", "row", "hash", "window")
+    def text(i: Int): String = {
+      val rnd = new scala.util.Random(i)
+      Seq.fill(1 + rnd.nextInt(3))(words(rnd.nextInt(words.length))).mkString(" ")
+    }
+    val cfg = graft.index.IndexBuildConfig(numShards = 2, shardGroups = 1)
+    val eng = SearchEngine.open(spark, tmpDir("churn"))
+    eng.upsertBatch((0 until 1000).map(i => Doc(i.toString, text(i))).toDS())
+    eng.buildBase(cfg)
+    // removes, replacements and new docs: more changed docs than the cutoff
+    eng.removeBatch((0 until 300).map(_.toString).toDS())
+    val upserts = (300 until 400).map(i => Doc(i.toString, text(i + 7))) ++
+      (1000 until 1000 + SearchEngine.ChurnCutoff).map(i => Doc(i.toString, text(i)))
+    eng.upsertBatch(upserts.toDS())
+    assert(eng.liveView(Array(0L)).churned.isEmpty, "churn should exceed the cutoff")
+
+    val fresh = SearchEngine.open(spark, tmpDir("churn_fresh"))
+    fresh.upsertBatch(((400 until 1000).map(i => Doc(i.toString, text(i))) ++ upserts).toDS())
+    fresh.buildBase(cfg, Some(eng.avgdl))
+
+    def bits(rs: Seq[SearchResult]) = rs.map(r => (r.id, java.lang.Float.floatToRawIntBits(r.score)))
+    for (q <- Seq("merge join", "window scan key")) {
+      val limited = bits(eng.search(q, Some(5)))
+      assert(limited.length === 5, s"query '$q'")
+      assert(limited === bits(eng.search(q, None).take(5)), s"query '$q' vs unlimited")
+      assert(limited === bits(fresh.search(q, Some(5))), s"query '$q' vs fresh engine")
+    }
+  }
 }

@@ -140,22 +140,6 @@ class PlanAuditSpec extends SparkTestBase {
       s"expected pruned read schema:\n$plan")
   }
 
-  test("liveN membership probes the sorted docids sidecar with a pushed filter") {
-    import graft.api.{Doc, SearchEngine}
-    val eng = SearchEngine.withDocuments(spark, tmpDir("audit_liven"),
-      Seq(Doc("a", "alpha beta"), Doc("b", "gamma delta"), Doc("c", "beta gamma")))
-    eng.remove("b") // a superseded id → the live view must correct N
-    // sidecar exists and is the membership table
-    val plan = eng.baseMembershipTable
-      .where($"doc_id".isin(Long.box(1L), Long.box(2L)))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("docids"), s"membership not on the sidecar:\n$plan")
-    assert(plan.contains("PushedFilters: [In(doc_id") || plan.contains("PushedFilters: [Or(EqualTo(doc_id"),
-      s"id probe not pushed into the scan:\n$plan")
-    // and the corrected N is observable through search (live view excludes b)
-    assert(eng.count() === 2)
-  }
-
   test("sessionize plans one user_id exchange shared by window and aggregation") {
     val df = graft.Queries.all("evt_sessionize")(spark, "/root/testdata/sf0.001")
     val plan = df.queryExecution.executedPlan.toString
