@@ -367,10 +367,13 @@ final class SearchEngine private[api] (
   // -------------------------------------------------------------- base index
 
   /** Batch-builds the base index from the current live docs (distributed,
-    * checkpointed — see IndexBuilder), then seals the covered log seq.
+    * checkpointed — see IndexBuilder), then seals the covered log seq. An
+    * engine that already has a base folds its changes in with `compact()`.
     */
   def buildBase(cfg: IndexBuildConfig = IndexBuildConfig(numShards = 4, shardGroups = 2),
                 avgdlOverride: Option[Float] = None): Unit = {
+    if (baseExists) throw new IllegalStateException(
+      s"$dir already has a base index; use compact() to fold pending changes into it")
     requireDistinctSurrogates()
     IndexBuilder.build(spark, liveCorpus, tokenizer, indexPath, cfg,
       Map("source" -> logPath), avgdlOverride)
@@ -397,11 +400,7 @@ final class SearchEngine private[api] (
 
   /** Log seq covered by the current base (recorded at build). */
   private def builtSeqMarker: Long =
-    Checkpoints.readAll(indexPath).get("base_seq") match {
-      case Some(s) =>
-        new com.fasterxml.jackson.databind.ObjectMapper().readTree(s).get("seq").asLong()
-      case None => -1L
-    }
+    Checkpoints.read(indexPath, "base_seq").fold(-1L)(_.get("seq").asLong())
 
   private def sealBase(): Unit =
     Checkpoints.commit(indexPath, "base_seq", Map("seq" -> (nextSeq - 1)))
@@ -527,13 +526,15 @@ final class SearchEngine private[api] (
     }
   }
 
-  /** Distributed compaction: with an existing base, folds pending deltas in
-    * via the multi-way posting merge (Compactor — base blocks are decoded
-    * and merged, never re-tokenized); without one, batch-builds from the
-    * live docs. Physical-only either way: the frozen avgdl carries through,
-    * so scores do not move.
+  /** Distributed compaction: with an existing base, rebuilds it from its
+    * forward table minus the changed docs plus the tokenized live deltas
+    * (Compactor — the base corpus is never re-tokenized); without one,
+    * batch-builds from the live docs. Physical-only either way: the frozen
+    * avgdl carries through, so scores do not move. Fails before writing
+    * anything if two keys in the log share a surrogate.
     */
   def compact(cfg: IndexBuildConfig = IndexBuildConfig(numShards = 4, shardGroups = 2)): Unit = {
+    requireDistinctSurrogates()
     val frozenAvgdl = avgdl
     val sealSeq = nextSeq - 1
     val tmp = s"$dir/index_compacting"
@@ -543,7 +544,6 @@ final class SearchEngine private[api] (
       val deltaCorpus = deltaLive.map { case (id, c) => CorpusDoc(id, c) }
       Compactor.merge(spark, indexPath, tmp, deltaCorpus, supersededIds, tokenizer, cfg)
     } else {
-      requireDistinctSurrogates()
       IndexBuilder.build(spark, liveCorpus, tokenizer, tmp, cfg,
         Map("source" -> logPath), Some(frozenAvgdl))
     }

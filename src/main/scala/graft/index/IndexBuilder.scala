@@ -34,7 +34,6 @@ final case class IndexBuildConfig(
     blockSize: Int = 128,
     termBuckets: Int = 64,
     shardGroups: Int = 4, // checkpoint granularity for the postings stage
-    saltBuckets: Int = 16, // two-phase (salted) df aggregation fan-out
     postingTasks: Int = 0, // shuffle tasks for the postings stage (0 = 3x parallelism)
     // escape valve for pathologically hot terms: split each (shard,
     // term-prefix) merge group into 2^k doc-range slices so no reduce task
@@ -64,11 +63,17 @@ final case class IndexBuildConfig(
   *                        (explicit skew handling for hot terms) →
   *                        parquet partitioned by term bucket.
   *
+  * Everything after tokenization derives from the forward rows alone, so
+  * the compactor runs the same stages on a merged forward table
+  * (`fromForward`).
   * Every stage commits a checkpoint marker with lineage + metrics; a
   * restarted build skips committed stages/groups (kill/resume test in
   * IndexResumeSpec).
   */
 object IndexBuilder {
+
+  /** Fan-out of the salted first phase of the df aggregation. */
+  private val SaltBuckets = 16
 
   def tokenizerConfig(t: TextTokenizer): TokenizerConfig = t match {
     case b: Bm25Tokenizer => TokenizerConfig(b.language.name, b.normalization, b.stopwords, b.stemming)
@@ -92,51 +97,62 @@ object IndexBuilder {
     if (IndexManifest.exists(indexDir)) return IndexManifest.read(indexDir)
 
     // --- shard bounds (range partitioning of the doc-id space) ------------
-    val bounds: Array[Long] =
-      if (Checkpoints.isDone(indexDir, "bounds")) {
-        val s = Checkpoints.readAll(indexDir)("bounds")
-        val n = com.fasterxml.jackson.databind.json.JsonMapper.builder().build().readTree(s)
+    val bounds: Array[Long] = Checkpoints.read(indexDir, "bounds") match {
+      case Some(n) =>
         val b = n.get("bounds").asText()
         if (b.isEmpty) Array.empty[Long] else b.split(",").map(_.toLong)
-      } else {
-        val bs =
-          if (cfg.numShards <= 1) Array.empty[Long]
-          else if (cfg.uniformIdSpace)
-            Array.tabulate(cfg.numShards - 1)(i => (Long.MaxValue / cfg.numShards) * (i + 1))
-          else docs.toDF().stat
-            .approxQuantile("doc_id", (1 until cfg.numShards).map(_.toDouble / cfg.numShards).toArray, 0.001)
-            .map(_.toLong)
-        Checkpoints.commit(indexDir, "bounds",
-          Map("bounds" -> bs.mkString(","), "numShards" -> cfg.numShards))
-        bs
-      }
-    def shardOf(docId: Long): Int = {
-      var lo = 0
-      var hi = bounds.length
-      while (lo < hi) { val mid = (lo + hi) >>> 1; if (docId < bounds(mid)) hi = mid else lo = mid + 1 }
-      lo
+      case None =>
+        if (cfg.numShards <= 1) Array.empty[Long]
+        else if (cfg.uniformIdSpace)
+          Array.tabulate(cfg.numShards - 1)(i => (Long.MaxValue / cfg.numShards) * (i + 1))
+        else docs.toDF().stat
+          .approxQuantile("doc_id", (1 until cfg.numShards).map(_.toDouble / cfg.numShards).toArray, 0.001)
+          .map(_.toLong)
     }
 
+    // --- stage 1 input: tokenize+hash+tf, one narrow pass ------------------
+    val emb = new Embedder(graft.bm25.Bm25Params(), tokenizer, hasher) // tf/dl only; params unused
+    val fwd = docs.mapPartitions { it =>
+      it.map { d =>
+        val (terms, tfs, dl) = emb.termFrequencies(d.content)
+        ForwardRow(d.doc_id, IndexManifest.shardOf(bounds, d.doc_id), dl, terms, tfs)
+      }
+    }
+    fromForward(spark, fwd, indexDir, cfg, bounds, tokenizerConfig(tokenizer), hasher.name,
+      avgdlOverride, lineage ++ Map("builder" -> "graft.index.IndexBuilder"), t0)
+  }
+
+  /** Stages 1-4 plus the manifest, from forward rows already keyed by shard
+    * under `bounds`. The batch build feeds it the tokenized corpus; the
+    * compactor feeds it the merged forward table with the base's layout, so
+    * posting blocks are written from forward rows by this one path.
+    *
+    * @param avgdl the avgdl to record; `None` derives it from the stats
+    * @param t0 `System.nanoTime()` at the start of the caller's build
+    */
+  private[index] def fromForward(spark: SparkSession, forward: Dataset[ForwardRow],
+                                 indexDir: String, cfg: IndexBuildConfig, bounds: Array[Long],
+                                 tokenizer: TokenizerConfig, hasher: String,
+                                 avgdl: Option[Float], lineage: Map[String, String],
+                                 t0: Long): IndexManifest = {
+    import spark.implicits._
     val fwdPath = s"$indexDir/forward"
     val postingsPath = s"$indexDir/postings"
     val termstatsPath = s"$indexDir/termstats"
 
+    if (!Checkpoints.isDone(indexDir, "bounds"))
+      Checkpoints.commit(indexDir, "bounds",
+        Map("bounds" -> bounds.mkString(","), "numShards" -> cfg.numShards))
+
     // --- stage 1: forward index ------------------------------------------
     if (!Checkpoints.isDone(indexDir, "forward")) {
       val t = System.nanoTime()
-      val emb = new Embedder(graft.bm25.Bm25Params(), tokenizer, hasher) // tf/dl only; params unused
-      val fwd = docs.mapPartitions { it =>
-        it.map { d =>
-          val (terms, tfs, dl) = emb.termFrequencies(d.content)
-          ForwardRow(d.doc_id, shardOf(d.doc_id), dl, terms, tfs)
-        }
-      }
       // Written in input partitioning: the forward build is a pure narrow
       // map (tokenize+hash+tf), NO shuffle — the postings stage re-shuffles
       // by shard anyway, and shard/doc_id remain ordinary columns for
       // stats-based pruning. (An earlier repartition+partitionBy layout
       // serialized this stage on shuffle + small-file IO.)
-      fwd.write.mode(SaveMode.Overwrite).parquet(fwdPath)
+      forward.write.mode(SaveMode.Overwrite).parquet(fwdPath)
       // row count is recorded by the stats stage (single agg over the output)
       Checkpoints.commit(indexDir, "forward", Map(
         "seconds" -> (System.nanoTime() - t) / 1e9))
@@ -148,65 +164,56 @@ object IndexBuilder {
     // the build (its result is not needed until the manifest is written).
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    val statsF: Future[(Long, Long)] =
-      if (Checkpoints.isDone(indexDir, "stats")) {
-        val s = Checkpoints.readAll(indexDir)("stats")
-        val n = com.fasterxml.jackson.databind.json.JsonMapper.builder().build().readTree(s)
-        Future.successful((n.get("nDocs").asLong(), n.get("sumDl").asLong()))
-      } else Future {
+    val statsF: Future[(Long, Long)] = Checkpoints.read(indexDir, "stats") match {
+      case Some(n) => Future.successful((n.get("nDocs").asLong(), n.get("sumDl").asLong()))
+      case None => Future {
         val row = spark.read.parquet(fwdPath).agg(count(lit(1)), coalesce(sum($"dl"), lit(0L))).head()
         val (n, s) = (row.getLong(0), row.getLong(1))
         Checkpoints.commit(indexDir, "stats", Map("nDocs" -> n, "sumDl" -> s))
         (n, s)
       }
+    }
 
     // --- stage 3: posting blocks per shard group --------------------------
     val groups = math.max(1, math.min(cfg.shardGroups, cfg.numShards))
     var encBlocks = 0L; var encBytes = 0L; var encPostings = 0L
     for (g <- 0 until groups) {
       val name = s"postings_g$g"
-      if (Checkpoints.isDone(indexDir, name)) {
-        val s = Checkpoints.readAll(indexDir)(name)
-        val n = com.fasterxml.jackson.databind.json.JsonMapper.builder().build().readTree(s)
-        if (n.has("blocks")) {
-          encBlocks += n.get("blocks").asLong(); encBytes += n.get("bytes").asLong()
-          encPostings += n.get("postings").asLong()
-        } else {
-          // checkpoint predates the metrics keys: recompute from the durable
-          // group output instead of silently reporting 0
-          val m = spark.read.parquet(s"$postingsPath/group=$g")
-            .agg(count(lit(1)),
-              coalesce(sum(length($"docs") + length($"tfs") + length($"dls")), lit(0L)),
-              coalesce(sum($"cnt".cast("long")), lit(0L))).head()
-          encBlocks += m.getLong(0); encBytes += m.getLong(1); encPostings += m.getLong(2)
-        }
-      } else {
-        val t = System.nanoTime()
-        val shardsInGroup = (0 until cfg.numShards).filter(_ % groups == g)
-        // Columnar end-to-end: explode via Catalyst's generate (whole-stage
-        // codegen, no per-posting JVM objects), shuffle+sort on UnsafeRows,
-        // and encode straight off InternalRow — an earlier typed-Dataset
-        // version allocated a Tuple5 per posting on both shuffle sides
-        // (287M objects at the 1M-doc bench) and was GC-bound.
-        val exploded = spark.read.parquet(fwdPath)
-          .where($"shard".isin(shardsInGroup: _*))
-          .select($"shard", $"doc_id", $"dl", explode(arrays_zip($"terms", $"tfs")).as("te"))
-          .select($"shard", $"te.terms".as("term"), $"doc_id", $"te.tfs".as("tf"), $"dl")
-        // Partition by (shard, term): a term's postings within a shard stay
-        // in one task (whole blocks), while the task count scales with the
-        // cluster instead of the shard count — numShards stops being a
-        // parallelism ceiling.
-        // each group owns its subdirectory (hive-style `group=N`, so readers
-        // of the root discover it as a partition column): group overwrite is
-        // a plain directory replace, and each task writes exactly one file
-        val (b, by, p) = encodePostingRows(spark, exploded, s"$postingsPath/group=$g", cfg,
-          math.max(shardsInGroup.size, 1))
-        encBlocks += b; encBytes += by; encPostings += p
-        Checkpoints.commit(indexDir, name, Map(
-          "shards" -> shardsInGroup.mkString(","),
-          "blocks" -> b, "bytes" -> by, "postings" -> p,
-          "seconds" -> (System.nanoTime() - t) / 1e9))
+      // each group owns its subdirectory (hive-style `group=N`, so readers
+      // of the root discover it as a partition column): group overwrite is
+      // a plain directory replace, and each task writes exactly one file
+      val groupPath = s"$postingsPath/group=$g"
+      val (b, by, p) = Checkpoints.read(indexDir, name) match {
+        case Some(n) if n.has("blocks") =>
+          (n.get("blocks").asLong(), n.get("bytes").asLong(), n.get("postings").asLong())
+        // checkpoint predates the metrics keys: recompute from the durable
+        // group output instead of silently reporting 0
+        case Some(_) => blockMetrics(spark, groupPath)
+        case None =>
+          val t = System.nanoTime()
+          val shardsInGroup = (0 until cfg.numShards).filter(_ % groups == g)
+          // Columnar end-to-end: explode via Catalyst's generate (whole-stage
+          // codegen, no per-posting JVM objects), shuffle+sort on UnsafeRows,
+          // and encode straight off InternalRow — an earlier typed-Dataset
+          // version allocated a Tuple5 per posting on both shuffle sides
+          // (287M objects at the 1M-doc bench) and was GC-bound.
+          val exploded = spark.read.parquet(fwdPath)
+            .where($"shard".isin(shardsInGroup: _*))
+            .select($"shard", $"doc_id", $"dl", explode(arrays_zip($"terms", $"tfs")).as("te"))
+            .select($"shard", $"te.terms".as("term"), $"doc_id", $"te.tfs".as("tf"), $"dl")
+          // Partition by (shard, term): a term's postings within a shard stay
+          // in one task (whole blocks), while the task count scales with the
+          // cluster instead of the shard count — numShards stops being a
+          // parallelism ceiling.
+          val m = encodePostingRows(spark, exploded, groupPath, cfg,
+            math.max(shardsInGroup.size, 1))
+          Checkpoints.commit(indexDir, name, Map(
+            "shards" -> shardsInGroup.mkString(","),
+            "blocks" -> m._1, "bytes" -> m._2, "postings" -> m._3,
+            "seconds" -> (System.nanoTime() - t) / 1e9))
+          m
       }
+      encBlocks += b; encBytes += by; encPostings += p
     }
 
     // --- stage 4: term stats (df) via salted two-phase aggregation --------
@@ -220,35 +227,28 @@ object IndexBuilder {
     // --- finalize: metrics + manifest -------------------------------------
     import scala.concurrent.duration.Duration
     val (nDocs, sumDl) = Await.result(statsF, Duration.Inf)
-    val avgdl = avgdlOverride.getOrElse(
-      if (nDocs == 0L) Embedder.FallbackAvgdl
-      else (sumDl.toDouble / nDocs.toDouble).toFloat)
     val seconds = (System.nanoTime() - t0) / 1e9
-    val metrics = computeMetrics(spark, termstatsPath, nDocs, seconds,
-      encBlocks, encBytes, encPostings)
     val manifest = IndexManifest(
       version = IndexManifest.CurrentVersion,
       numShards = cfg.numShards,
       blockSize = cfg.blockSize,
       termBuckets = cfg.termBuckets,
-      tokenizer = tokenizerConfig(tokenizer),
-      hasher = hasher.name,
+      tokenizer = tokenizer,
+      hasher = hasher,
       nDocs = nDocs,
       sumDl = sumDl,
-      avgdl = avgdl,
+      avgdl = avgdl.getOrElse(
+        if (nDocs == 0L) Embedder.FallbackAvgdl
+        else (sumDl.toDouble / nDocs.toDouble).toFloat),
       shardBounds = bounds,
-      lineage = lineage ++ Map("builder" -> "graft.index.IndexBuilder"),
-      metrics = metrics
+      lineage = lineage,
+      metrics = computeMetrics(spark, termstatsPath, nDocs, seconds,
+        encBlocks, encBytes, encPostings)
     )
     manifest.write(indexDir)
     manifest
   }
 
-  /** Sorts posting rows (shard, term, doc_id, tf, dl) through the
-    * (shard, term)-partitioned exchange and writes encoded blocks. Shared by
-    * the batch build and the merge compactor (the shuffle-sort IS the
-    * distributed multi-way merge of whatever sorted/unsorted runs feed it).
-    */
   /** Distributed multi-way posting merge (north_rule): map tasks locally
     * sort bounded posting buffers and emit delta+varbyte run CHUNKS
     * (~10 B/posting) keyed by (shard, term-prefix) group; the exchange
@@ -256,10 +256,9 @@ object IndexBuilder {
     * merges the sorted chunks straight into blocks — no external sort at
     * all. See PostingRuns for the chunk format and determinism argument.
     */
-  private[graft] def encodePostingRows(spark: SparkSession,
-                                       rows: org.apache.spark.sql.DataFrame,
-                                       outPath: String, cfg: IndexBuildConfig,
-                                       minTasks: Int = 1): (Long, Long, Long) = {
+  private def encodePostingRows(spark: SparkSession, rows: org.apache.spark.sql.DataFrame,
+                                outPath: String, cfg: IndexBuildConfig,
+                                minTasks: Int): (Long, Long, Long) = {
     import spark.implicits._
     val numPostingTasks =
       if (cfg.postingTasks > 0) cfg.postingTasks
@@ -321,10 +320,17 @@ object IndexBuilder {
     }
     spark.createDataset(blockRdd)
       .write.mode(SaveMode.Overwrite).parquet(outPath)
-    // metrics from the WRITTEN parquet (not accumulators): task retries /
-    // speculative attempts cannot double-count, and a resumed build can
-    // always recompute them from the durable output
-    val m = spark.read.parquet(outPath)
+    blockMetrics(spark, outPath)
+  }
+
+  /** (blocks, encoded bytes, postings) of written blocks. Read from the
+    * parquet, not accumulators: task retries / speculative attempts cannot
+    * double-count, and a resumed build can always recompute them from the
+    * durable output.
+    */
+  private def blockMetrics(spark: SparkSession, path: String): (Long, Long, Long) = {
+    import spark.implicits._
+    val m = spark.read.parquet(path)
       .agg(count(lit(1)),
         coalesce(sum(length($"docs") + length($"tfs") + length($"dls")), lit(0L)),
         coalesce(sum($"cnt".cast("long")), lit(0L))).head()
@@ -380,14 +386,14 @@ object IndexBuilder {
   /** df(term) via salted two-phase aggregation over the encoded blocks,
     * written bucket-partitioned for query-time pruning.
     */
-  private[graft] def buildTermstats(spark: SparkSession, postingsPath: String,
-                                    termstatsPath: String, cfg: IndexBuildConfig): Unit = {
+  private def buildTermstats(spark: SparkSession, postingsPath: String,
+                             termstatsPath: String, cfg: IndexBuildConfig): Unit = {
     import spark.implicits._
     val blocksDf = spark.read.parquet(postingsPath)
     // salt on block id: partial sums per (term, salt), then final merge —
     // bounds any single reducer's load for pathologically hot terms.
     val partial = blocksDf
-      .groupBy($"term", pmod($"block", lit(cfg.saltBuckets)).as("salt"))
+      .groupBy($"term", pmod($"block", lit(SaltBuckets)).as("salt"))
       .agg(sum($"cnt").as("c"))
     val df = partial.groupBy($"term").agg(sum($"c").as("df"))
       .withColumn("bucket", pmod($"term", lit(cfg.termBuckets)).cast("int"))
@@ -396,14 +402,14 @@ object IndexBuilder {
       .write.mode(SaveMode.Overwrite).parquet(termstatsPath)
   }
 
-  /** Index-wide metrics: block stats come from the encoder's accumulators
-    * (no end-of-build postings rescan); only the small termstats table is
+  /** Index-wide metrics: block stats come from the postings stage (no
+    * end-of-build postings rescan); only the small termstats table is
     * aggregated here.
     */
-  private[graft] def computeMetrics(spark: SparkSession, termstatsPath: String,
-                                    nDocs: Long, seconds: Double,
-                                    nBlocks: Long, bytes: Long,
-                                    postings: Long): Map[String, Double] = {
+  private def computeMetrics(spark: SparkSession, termstatsPath: String,
+                             nDocs: Long, seconds: Double,
+                             nBlocks: Long, bytes: Long,
+                             postings: Long): Map[String, Double] = {
     import spark.implicits._
     val stats = spark.read.parquet(termstatsPath).agg(
       count(lit(1)), coalesce(max($"df"), lit(0L)), coalesce(avg($"df"), lit(0.0))).head()

@@ -1,6 +1,6 @@
 package graft.index
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -35,16 +35,8 @@ final case class IndexManifest(
     s"index format version $version is not supported (current: " +
       s"${IndexManifest.CurrentVersion}) — rebuild the index with this library version")
 
-  /** Range shard for a doc id (binary search over recorded bounds). */
-  def shardOf(docId: Long): Int = {
-    var lo = 0
-    var hi = shardBounds.length // shard index in [0, numShards)
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (docId < shardBounds(mid)) hi = mid else lo = mid + 1
-    }
-    lo
-  }
+  /** Range shard for a doc id under this index's bounds. */
+  def shardOf(docId: Long): Int = IndexManifest.shardOf(shardBounds, docId)
 
   /** Termstats bucket — MUST match the builder's `pmod` (non-negative even
     * for negative 64-bit term hashes from custom hashers).
@@ -77,6 +69,19 @@ object IndexManifest {
   val LayoutRev = "b"
 
   private val mapper = new ObjectMapper()
+
+  /** Range shard in [0, bounds.length] for a doc id: binary search over
+    * ascending exclusive upper bounds.
+    */
+  def shardOf(bounds: Array[Long], docId: Long): Int = {
+    var lo = 0
+    var hi = bounds.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (docId < bounds(mid)) hi = mid else lo = mid + 1
+    }
+    lo
+  }
 
   def write(m: IndexManifest, indexDir: String): Unit = {
     val root = mapper.createObjectNode()
@@ -145,6 +150,12 @@ object Checkpoints {
     Paths.get(indexDir, "_checkpoints", s"$name.json")
 
   def isDone(indexDir: String, name: String): Boolean = Files.exists(path(indexDir, name))
+
+  /** The parsed payload of a committed marker; `None` if not committed. */
+  def read(indexDir: String, name: String): Option[JsonNode] = {
+    val p = path(indexDir, name)
+    if (Files.exists(p)) Some(mapper.readTree(Files.readAllBytes(p))) else None
+  }
 
   def commit(indexDir: String, name: String, payload: Map[String, Any]): Unit = {
     val p = path(indexDir, name)

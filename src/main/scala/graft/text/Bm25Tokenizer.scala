@@ -98,10 +98,10 @@ final class Bm25Tokenizer private (
       if (normalization) raw.map(Transliterate(_)) else raw
     }
 
-  // Stemming is ~75 % of tokenize cost (graft.tools.TokBench), and Zipf-
-  // skewed corpora re-stem the same head tokens constantly, so stems are
-  // memoized in a bounded per-thread map: no synchronization, cleared
-  // wholesale when full (the hot head repopulates within one document —
+  // Stemming is ~75 % of tokenize cost (perfbench tracks tokenize cost as
+  // text.tokenize_docs_per_s), and Zipf-skewed corpora re-stem the same
+  // head tokens constantly, so stems are memoized in a bounded per-thread
+  // map: no synchronization, cleared wholesale when full (the hot head repopulates within one document —
   // cheaper than LRU bookkeeping). @transient: rebuilt lazily after the
   // tokenizer is deserialized onto an executor. Memoization is transparent
   // because stem() is pure; the EN/DE snapshot suites assert bit-exact

@@ -79,8 +79,9 @@ object ScalingBench {
       }).sorted
       def pct(p: Double) = lats(math.min(lats.length - 1, (p * lats.length).toInt))
 
-      val stageSecs = Checkpoints.readAll(indexDir).toSeq.sortBy(_._1).flatMap { case (name, json) =>
-        "\"seconds\"\\s*:\\s*([0-9.]+)".r.findFirstMatchIn(json).map(m => s""""$name":${m.group(1).toDouble.round}""")
+      val stageSecs = Checkpoints.readAll(indexDir).keys.toSeq.sorted.flatMap { name =>
+        Checkpoints.read(indexDir, name).filter(_.has("seconds"))
+          .map(n => s""""$name":${n.get("seconds").asDouble().round}""")
       }.mkString("{", ",", "}")
       println(f"""{"bench":"scaling","cpus":$cpus,"n_docs":${manifest.nDocs},"build_sec":$buildSec%.2f,"docs_per_sec":${manifest.nDocs / buildSec}%.1f,"postings_per_sec":${manifest.metrics("postings") / buildSec}%.1f,"postings":${manifest.metrics("postings")}%.0f,"bytes_per_posting":${manifest.metrics("bytesPerPosting")}%.3f,"df_skew_ratio":${manifest.metrics("dfSkewRatio")}%.1f,"query_p50_ms":${pct(0.5)}%.1f,"query_p95_ms":${pct(0.95)}%.1f,"stages":$stageSecs}""")
     } finally spark.stop()

@@ -465,6 +465,27 @@ class SearchEngineSpec extends SparkTestBase {
       val ex = intercept[IllegalArgumentException](build())
       assert(ex.getMessage.contains(a) && ex.getMessage.contains(b), ex.getMessage)
     }
+    // a colliding key that arrives after the base fails compaction too,
+    // before the fold could keep one doc per surrogate
+    val based = SearchEngine.withAvgdl(spark, tmpDir("clash_base"), 2.0f)
+    based.upsert(Doc(a, "first file"))
+    based.buildBase()
+    based.upsert(Doc(b, "second file"))
+    val ex = intercept[IllegalArgumentException](based.compact())
+    assert(ex.getMessage.contains(a) && ex.getMessage.contains(b), ex.getMessage)
+    assert(based.get(a).contains(Doc(a, "first file")))
+  }
+
+  test("a second buildBase fails instead of sealing unindexed upserts") {
+    val dir = tmpDir("rebuild")
+    val eng = SearchEngine.withDocuments(spark, dir, Seq(Doc("a", "grilled cheese sandwich")))
+    eng.upsert(Doc("b", "cheese on toast"))
+    val ex = intercept[IllegalStateException](eng.buildBase())
+    assert(ex.getMessage.contains("compact()"), ex.getMessage)
+    assert(eng.search("cheese", None).map(_.id).toSet === Set("a", "b"))
+    val reopened = SearchEngine.open(spark, dir)
+    assert(reopened.search("cheese", None).map(_.id).toSet === Set("a", "b"))
+    assert(reopened.count() === 2L)
   }
 
   test("past the churn cutoff, limited ≡ unlimited first k ≡ a fresh engine, bit-exact") {
