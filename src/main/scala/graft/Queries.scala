@@ -104,7 +104,7 @@ object Queries {
       .withColumn("w", $"tf" * lit(2.2) / ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dl" / lit(avgdl))))
       .groupBy($"doc_id").agg(round(sum($"idf" * $"w"), 3).as("score_r"))
     // map the engine's surrogate ids back to the original doc ids via the log
-    val keys = spark.read.parquet(s"$dir/docstore").select($"doc_id", $"key").distinct()
+    val keys = eng.logTable.select($"doc_id", $"key").distinct()
     scored.join(keys, "doc_id")
       .select($"key".cast("long").as("doc_id"), $"score_r")
       .orderBy($"score_r".desc, $"doc_id")
@@ -638,7 +638,7 @@ object Queries {
     "ft_df_topterms" -> { (spark, sfDir) =>
       import spark.implicits._
       val dir = cachedIndex(spark, sfDir, "simple", simpleTokenizer)
-      val terms = spark.read.parquet(s"$dir/termstats").select($"term", $"df")
+      val terms = IndexTables.termstats(spark, dir).select($"term", $"df")
       val dict = docs(spark, sfDir)
         .select(explode(split($"text", " ")).as("token"))
         .where(length($"token") > 0)
@@ -669,7 +669,7 @@ object Queries {
       // expression (matches DuckDB's avg()), identical values, one Spark
       // job instead of three.
       val dfs = idx.termStatsFor(qTerms)
-      val avgDf = spark.read.parquet(s"$dir/forward")
+      val avgDf = IndexTables.forward(spark, dir)
         .agg((sum($"dl").cast("double") / count(lit(1))).as("avgdl"))
       val posts = idx.postingsFor(qTerms).toDF()
       posts.join(broadcast(dfs), "term")

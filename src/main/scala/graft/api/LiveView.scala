@@ -1,7 +1,7 @@
 package graft.api
 
 import graft.bm25.{Bm25Math, Embedder}
-import graft.index.{Bm25Index, Posting}
+import graft.index.{Bm25Index, IndexTables, Posting}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -75,7 +75,7 @@ private[graft] final class LiveView private[api] (
   // per query term, those holding it.
   private val (supersededN, supersededDf) = base match {
     case Some(idx) if !noChurn =>
-      val row = superseded(spark.read.parquet(s"${idx.indexDir}/forward"), keep = true)
+      val row = superseded(IndexTables.forward(spark, idx.indexDir), keep = true)
         .agg(count(lit(1)), terms.map(t => count(when(array_contains($"terms", t), 1))): _*)
         .head()
       (row.getLong(0), terms.indices.map(i => terms(i) -> row.getLong(i + 1)).toMap)

@@ -3,7 +3,7 @@ package graft.api
 import graft.bm25.{Bm25Math, Bm25Params, Embedder}
 import graft.index._
 import graft.text.{Bm25Tokenizer, FxHash, Language, TextTokenizer}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -102,6 +102,13 @@ final class SearchEngine private[api] (
         "(move the flat files into the bucketed layout or restore a backup)")
     dataNames.isEmpty || hasBucket
   }
+
+  /** The one reader of the docstore log: `LogRow` columns, declared so no
+    * schema-inference job runs, plus the `bucket` partition column of a
+    * bucketed log, discovered from its directory names.
+    */
+  private[graft] def logTable: DataFrame =
+    spark.read.schema(SearchEngine.LogSchema).parquet(logPath)
 
   /** All log writers funnel here: stamps the bucket partition column. */
   private def writeLog(df: DataFrame): Unit = writeLogTo(df, logPath)
@@ -257,7 +264,7 @@ final class SearchEngine private[api] (
     * must reach PushedFilters).
     */
   private[graft] def postBaseLogScan(marker: Long): DataFrame =
-    spark.read.parquet(logPath).where($"seq" > marker)
+    logTable.where($"seq" > marker)
 
   private def baseIndex: Option[Bm25Index] =
     if (baseExists)
@@ -320,45 +327,54 @@ final class SearchEngine private[api] (
 
   // ---------------------------------------------------------------- doc read
 
-  /** Latest-seq-wins: each doc_id's newest row of `log`, tombstones kept. */
+  /** Latest-wins over a distributed log scan: each doc_id's first row of
+    * `log` in `SearchEngine.LatestFirst` order, tombstones kept. Reads of
+    * the whole log (`liveDocs`, `changedState`, `compactLog`) use it; reads
+    * of a few docs' rows collect them and pick on the driver
+    * (`SearchEngine.latestLive`), by the same order.
+    */
   private def latestRows(log: DataFrame): DataFrame =
-    log.withColumn("rn", row_number().over(Window.partitionBy($"doc_id").orderBy($"seq".desc)))
+    log.withColumn("rn", row_number().over(
+      Window.partitionBy($"doc_id").orderBy(SearchEngine.LatestFirst: _*)))
       .where($"rn" === 1)
 
   /** Latest-seq-wins live view of the doc store. */
   def liveDocs: Dataset[Doc] = {
     if (!logExists) return spark.emptyDataset[Doc]
-    latestRows(spark.read.parquet(logPath))
+    latestRows(logTable)
       .where(!$"tombstone")
       .select($"key".as("id"), $"contents")
       .as[Doc]
   }
 
-  /** Point read: partition-pruned to one bucket directory + doc_id pushed
-    * to the parquet row groups, then latest-seq-wins over just that doc's
-    * rows — never a full-log window (the r3 judge's finding #4).
+  /** Point read, one Spark job: the key's log rows, partition-pruned to one
+    * bucket directory with doc_id pushed to the parquet row groups, are
+    * collected and the latest one is picked on the driver — never a window
+    * over the log.
     */
   def get(id: String): Option[Doc] = {
     if (!logExists) return None
-    pointRows(id)
-      .where(!$"tombstone")
-      .select($"key".as("id"), $"contents")
-      .as[Doc].collect().headOption
+    SearchEngine.latestLive(pointRows(id).collect()).values.headOption
+      .map(r => Doc(r.key, r.contents))
   }
 
-  /** The pruned latest-row plan for one key (exposed for the plan audit).
-    * Filters on the STRING key as well as its hash surrogate: the surrogate
-    * prunes (partition dir + row-group stats), the key equality guarantees a
+  /** Every log row of one key (exposed for the plan audit). Filters on the
+    * STRING key as well as its hash surrogate: the surrogate prunes
+    * (partition dir + row-group stats), the key equality guarantees a
     * colliding key's rows can never shadow the requested doc.
     */
-  private[graft] def pointRows(id: String): DataFrame = {
+  private[graft] def pointRows(id: String): Dataset[LogRow] = {
     val sid = surrogate(id)
-    val pruned =
-      if (bucketedLog)
-        spark.read.parquet(logPath).where($"bucket" === sid % DocstoreBuckets)
-      else spark.read.parquet(logPath)
-    latestRows(pruned.where($"doc_id" === sid && $"key" === id))
+    inBuckets(Array(sid)).where($"doc_id" === sid && $"key" === id).as[LogRow]
   }
+
+  /** The log scan pruned to the bucket directories of `ids`; the whole log
+    * when it is flat.
+    */
+  private def inBuckets(ids: Array[Long]): DataFrame =
+    if (bucketedLog)
+      logTable.where($"bucket".isin(ids.map(id => Int.box((id % DocstoreBuckets).toInt)).distinct: _*))
+    else logTable
 
   def iter(): Dataset[Doc] = liveDocs
 
@@ -388,7 +404,7 @@ final class SearchEngine private[api] (
     * doc_id would keep one of them and drop the other without a trace.
     */
   private def requireDistinctSurrogates(): Unit = if (logExists) {
-    val clash = spark.read.parquet(logPath).groupBy($"doc_id")
+    val clash = logTable.groupBy($"doc_id")
       .agg(min($"key").as("a"), max($"key").as("b"))
       .where($"a" =!= $"b")
       .limit(1).as[(Long, String, String)].collect()
@@ -416,7 +432,7 @@ final class SearchEngine private[api] (
     * bulk) instead of windowing the entire log per search.
     */
   private def changedState(marker: Long): DataFrame =
-    latestRows(spark.read.parquet(logPath).where($"seq" > marker))
+    latestRows(logTable.where($"seq" > marker))
       .select($"doc_id", $"tombstone", $"contents")
 
   /** Live docs newer than the base, and every doc id changed since, as
@@ -505,26 +521,24 @@ final class SearchEngine private[api] (
     resolveContents(hits)
   }
 
-  /** Contents join for scored hits. The id filter runs BEFORE the
-    * latest-seq window: only the hit docs' log rows are windowed (k groups
-    * in, k rows out), instead of ranking the entire docstore log and then
-    * keeping k docs — the r3 judge's finding #1 for the contents side.
-    * Equivalent because latest-wins is computed per doc_id, and the filter
-    * keeps every row of each kept doc_id.
+  /** Contents of scored hits, one Spark job: the hit docs' log rows are
+    * collected and each doc's latest row is picked on the driver. A hit has
+    * as many rows as it has versions in the log, so this stays small where
+    * a window would cost an exchange and a second job.
     */
   private def resolveContents(hits: Seq[(Long, Float)]): Seq[SearchResult] = {
     if (hits.isEmpty || !logExists) return Seq.empty
-    val log = SearchEngine.docIdsIn(spark.read.parquet(logPath), hits.map(_._1).toArray, keep = true)
-    val contents = latestRows(log)
-      .where(!$"tombstone")
-      .select($"doc_id", $"key", $"contents")
-      .as[(Long, String, String)].collect()
-      .map(r => r._1 -> (r._2, r._3)).toMap
-
+    val latest = SearchEngine.latestLive(hitRows(hits.map(_._1).toArray).collect())
     hits.flatMap { case (docId, score) =>
-      contents.get(docId).map { case (key, c) => SearchResult(key, c, score) }
+      latest.get(docId).map(r => SearchResult(r.key, r.contents, score))
     }
   }
+
+  /** Every log row of the docs `ids`, pruned to their bucket directories,
+    * with the ids pushed to the parquet scan (exposed for the plan audit).
+    */
+  private[graft] def hitRows(ids: Array[Long]): Dataset[LogRow] =
+    SearchEngine.docIdsIn(inBuckets(ids), ids, keep = true).as[LogRow]
 
   /** Distributed compaction: with an existing base, rebuilds it from its
     * forward table minus the changed docs plus the tokenized live deltas
@@ -589,7 +603,7 @@ final class SearchEngine private[api] (
     */
   private def compactLog(): Unit = {
     if (!logExists) return
-    val live = latestRows(spark.read.parquet(logPath))
+    val live = latestRows(logTable)
       .where(!$"tombstone")
       .select($"doc_id", $"key", $"contents", $"seq", $"tombstone")
     val tmp = s"$dir/docstore_compacting"
@@ -634,6 +648,34 @@ object SearchEngine {
     * (pushed into parquet); larger ones are broadcast and joined.
     */
   val MaxInLiterals = 10000
+
+  private val LogSchema = Encoders.product[LogRow].schema
+
+  /** The latest-wins order of one doc's log rows: seq desc, then — for rows
+    * sharing a seq, like a key repeated in one `upsertBatch` — a tombstone
+    * before an upsert, then key and contents ascending in UTF-8 byte order
+    * (Spark's string order, nulls first). It is total over distinct rows, so
+    * the window in `latestRows` and the driver pick in `latestLive` keep the
+    * same row.
+    */
+  private val LatestFirst: Seq[Column] =
+    Seq(col("seq").desc, col("tombstone").desc, col("key").asc, col("contents").asc)
+
+  private val latestFirstOrder: Ordering[LogRow] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    implicit val bytes: Ordering[UTF8String] = (x, y) => x.binaryCompare(y)
+    def utf8(s: String) = Option(s).map(UTF8String.fromString)
+    Ordering.by[LogRow, Long](_.seq).reverse
+      .orElseBy(r => !r.tombstone)
+      .orElseBy(r => utf8(r.key))
+      .orElseBy(r => utf8(r.contents))
+  }
+
+  /** Latest-wins on the driver: each doc's first row of `rows` in
+    * `LatestFirst` order, kept when it is not a tombstone.
+    */
+  private[api] def latestLive(rows: Array[LogRow]): Map[Long, LogRow] =
+    rows.groupBy(_.doc_id).view.mapValues(_.min(latestFirstOrder)).filter(!_._2.tombstone).toMap
 
   /** The Long doc id a key is stored under (FxHash64, sign bit cleared). */
   def surrogate(key: String): Long = FxHash.hash64(key) & Long.MaxValue

@@ -117,7 +117,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
     */
   def termStatsFor(terms: Array[Long]): DataFrame = {
     val buckets = terms.map(manifest.bucketOf).distinct
-    spark.read.parquet(s"$indexDir/termstats")
+    IndexTables.termstats(spark, indexDir)
       .where($"bucket".isin(buckets.map(Int.box): _*) && $"term".isin(terms.map(Long.box): _*))
       .select($"term", $"df")
   }
@@ -125,7 +125,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
   /** Decoded postings of the given terms (pruned scan over posting blocks). */
   def postingsFor(terms: Array[Long]): Dataset[Posting] = {
     if (terms.isEmpty) return spark.emptyDataset[Posting]
-    spark.read.parquet(s"$indexDir/postings")
+    IndexTables.postings(spark, indexDir)
       .where($"term".isin(terms: _*))
       .select($"term", $"cnt", $"docs", $"tfs", $"dls")
       .as[(Long, Int, Array[Byte], Array[Byte], Array[Byte])]
@@ -227,7 +227,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
     // task count scales with the cluster instead of the shard count.
     val numShards = manifest.numShards
     val slices = ShardSlices(manifest.shardBounds, wandFanoutRangesPerShard)
-    val blocks = spark.read.parquet(s"$indexDir/postings")
+    val blocks = IndexTables.postings(spark, indexDir)
       .where($"term".isin(present: _*))
       .select($"shard", $"term", $"block", $"cnt", $"max_tf", $"min_dl",
         $"min_doc", $"max_doc", $"docs", $"tfs", $"dls")
@@ -392,7 +392,7 @@ final class Bm25Index(spark: SparkSession, val indexDir: String,
   def scoreDoc(docId: Long, query: String): Option[Float] = {
     val qOcc = queryTerms(query)
     val shard = manifest.shardOf(docId)
-    val fwd = spark.read.parquet(s"$indexDir/forward")
+    val fwd = IndexTables.forward(spark, indexDir)
       .where($"shard" === shard && $"doc_id" === docId)
       .select($"doc_id", $"shard", $"dl", $"terms", $"tfs")
       .as[ForwardRow]

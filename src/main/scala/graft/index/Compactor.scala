@@ -64,7 +64,7 @@ object Compactor {
         ForwardRow(d.doc_id, IndexManifest.shardOf(bounds, d.doc_id), dl, terms, tfs)
       }
     }
-    val keptFwd = spark.read.parquet(s"$baseDir/forward")
+    val keptFwd = IndexTables.forward(spark, baseDir)
       .join(broadcast(drop), Seq("doc_id"), "left_anti").as[ForwardRow]
 
     // Physical layout MUST come from the base manifest: readers prune

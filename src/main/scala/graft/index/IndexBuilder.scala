@@ -138,7 +138,6 @@ object IndexBuilder {
     import spark.implicits._
     val fwdPath = s"$indexDir/forward"
     val postingsPath = s"$indexDir/postings"
-    val termstatsPath = s"$indexDir/termstats"
 
     if (!Checkpoints.isDone(indexDir, "bounds"))
       Checkpoints.commit(indexDir, "bounds",
@@ -167,7 +166,7 @@ object IndexBuilder {
     val statsF: Future[(Long, Long)] = Checkpoints.read(indexDir, "stats") match {
       case Some(n) => Future.successful((n.get("nDocs").asLong(), n.get("sumDl").asLong()))
       case None => Future {
-        val row = spark.read.parquet(fwdPath).agg(count(lit(1)), coalesce(sum($"dl"), lit(0L))).head()
+        val row = IndexTables.forward(spark, indexDir).agg(count(lit(1)), coalesce(sum($"dl"), lit(0L))).head()
         val (n, s) = (row.getLong(0), row.getLong(1))
         Checkpoints.commit(indexDir, "stats", Map("nDocs" -> n, "sumDl" -> s))
         (n, s)
@@ -188,7 +187,7 @@ object IndexBuilder {
           (n.get("blocks").asLong(), n.get("bytes").asLong(), n.get("postings").asLong())
         // checkpoint predates the metrics keys: recompute from the durable
         // group output instead of silently reporting 0
-        case Some(_) => blockMetrics(spark, groupPath)
+        case Some(_) => blockMetrics(spark, indexDir, g)
         case None =>
           val t = System.nanoTime()
           val shardsInGroup = (0 until cfg.numShards).filter(_ % groups == g)
@@ -197,7 +196,7 @@ object IndexBuilder {
           // and encode straight off InternalRow — an earlier typed-Dataset
           // version allocated a Tuple5 per posting on both shuffle sides
           // (287M objects at the 1M-doc bench) and was GC-bound.
-          val exploded = spark.read.parquet(fwdPath)
+          val exploded = IndexTables.forward(spark, indexDir)
             .where($"shard".isin(shardsInGroup: _*))
             .select($"shard", $"doc_id", $"dl", explode(arrays_zip($"terms", $"tfs")).as("te"))
             .select($"shard", $"te.terms".as("term"), $"doc_id", $"te.tfs".as("tf"), $"dl")
@@ -205,8 +204,8 @@ object IndexBuilder {
           // in one task (whole blocks), while the task count scales with the
           // cluster instead of the shard count — numShards stops being a
           // parallelism ceiling.
-          val m = encodePostingRows(spark, exploded, groupPath, cfg,
-            math.max(shardsInGroup.size, 1))
+          encodePostingRows(spark, exploded, groupPath, cfg, math.max(shardsInGroup.size, 1))
+          val m = blockMetrics(spark, indexDir, g)
           Checkpoints.commit(indexDir, name, Map(
             "shards" -> shardsInGroup.mkString(","),
             "blocks" -> m._1, "bytes" -> m._2, "postings" -> m._3,
@@ -219,7 +218,7 @@ object IndexBuilder {
     // --- stage 4: term stats (df) via salted two-phase aggregation --------
     if (!Checkpoints.isDone(indexDir, "termstats")) {
       val t = System.nanoTime()
-      buildTermstats(spark, postingsPath, termstatsPath, cfg)
+      buildTermstats(spark, indexDir, cfg)
       Checkpoints.commit(indexDir, "termstats",
         Map("seconds" -> (System.nanoTime() - t) / 1e9))
     }
@@ -242,7 +241,7 @@ object IndexBuilder {
         else (sumDl.toDouble / nDocs.toDouble).toFloat),
       shardBounds = bounds,
       lineage = lineage,
-      metrics = computeMetrics(spark, termstatsPath, nDocs, seconds,
+      metrics = computeMetrics(spark, indexDir, nDocs, seconds,
         encBlocks, encBytes, encPostings)
     )
     manifest.write(indexDir)
@@ -258,7 +257,7 @@ object IndexBuilder {
     */
   private def encodePostingRows(spark: SparkSession, rows: org.apache.spark.sql.DataFrame,
                                 outPath: String, cfg: IndexBuildConfig,
-                                minTasks: Int): (Long, Long, Long) = {
+                                minTasks: Int): Unit = {
     import spark.implicits._
     val numPostingTasks =
       if (cfg.postingTasks > 0) cfg.postingTasks
@@ -320,17 +319,16 @@ object IndexBuilder {
     }
     spark.createDataset(blockRdd)
       .write.mode(SaveMode.Overwrite).parquet(outPath)
-    blockMetrics(spark, outPath)
   }
 
-  /** (blocks, encoded bytes, postings) of written blocks. Read from the
-    * parquet, not accumulators: task retries / speculative attempts cannot
-    * double-count, and a resumed build can always recompute them from the
-    * durable output.
+  /** (blocks, encoded bytes, postings) of postings group `g`'s written
+    * blocks. Read from the parquet, not accumulators: task retries /
+    * speculative attempts cannot double-count, and a resumed build can
+    * always recompute them from the durable output.
     */
-  private def blockMetrics(spark: SparkSession, path: String): (Long, Long, Long) = {
+  private def blockMetrics(spark: SparkSession, indexDir: String, g: Int): (Long, Long, Long) = {
     import spark.implicits._
-    val m = spark.read.parquet(path)
+    val m = IndexTables.postings(spark, indexDir).where($"group" === g)
       .agg(count(lit(1)),
         coalesce(sum(length($"docs") + length($"tfs") + length($"dls")), lit(0L)),
         coalesce(sum($"cnt".cast("long")), lit(0L))).head()
@@ -386,10 +384,9 @@ object IndexBuilder {
   /** df(term) via salted two-phase aggregation over the encoded blocks,
     * written bucket-partitioned for query-time pruning.
     */
-  private def buildTermstats(spark: SparkSession, postingsPath: String,
-                             termstatsPath: String, cfg: IndexBuildConfig): Unit = {
+  private def buildTermstats(spark: SparkSession, indexDir: String, cfg: IndexBuildConfig): Unit = {
     import spark.implicits._
-    val blocksDf = spark.read.parquet(postingsPath)
+    val blocksDf = IndexTables.postings(spark, indexDir)
     // salt on block id: partial sums per (term, salt), then final merge —
     // bounds any single reducer's load for pathologically hot terms.
     val partial = blocksDf
@@ -399,19 +396,19 @@ object IndexBuilder {
       .withColumn("bucket", pmod($"term", lit(cfg.termBuckets)).cast("int"))
     df.repartition(cfg.termBuckets, $"bucket")
       .sortWithinPartitions($"bucket", $"term")
-      .write.mode(SaveMode.Overwrite).parquet(termstatsPath)
+      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/termstats")
   }
 
   /** Index-wide metrics: block stats come from the postings stage (no
     * end-of-build postings rescan); only the small termstats table is
     * aggregated here.
     */
-  private def computeMetrics(spark: SparkSession, termstatsPath: String,
+  private def computeMetrics(spark: SparkSession, indexDir: String,
                              nDocs: Long, seconds: Double,
                              nBlocks: Long, bytes: Long,
                              postings: Long): Map[String, Double] = {
     import spark.implicits._
-    val stats = spark.read.parquet(termstatsPath).agg(
+    val stats = IndexTables.termstats(spark, indexDir).agg(
       count(lit(1)), coalesce(max($"df"), lit(0L)), coalesce(avg($"df"), lit(0.0))).head()
     val (vocab, maxDf, meanDf) = (stats.getLong(0), stats.getLong(1), stats.getDouble(2))
     Map(

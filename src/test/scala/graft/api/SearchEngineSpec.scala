@@ -518,4 +518,31 @@ class SearchEngineSpec extends SparkTestBase {
       assert(limited === bits(fresh.search(q, Some(5))), s"query '$q' vs fresh engine")
     }
   }
+
+  test("a key repeated in one upsertBatch resolves to one row in get, search and iter") {
+    import spark.implicits._
+    // both versions of a key share the batch's seq; latest-wins breaks the
+    // tie by contents (ascending), so every read keeps the first word below
+    def batch(keys: Range, kept: String, dropped: String) = keys.flatMap { i =>
+      Seq(Doc(s"k$i", s"shared v$i $dropped"), Doc(s"k$i", s"shared v$i $kept"))
+    }.toDS().repartition(4)
+    val eng = SearchEngine.open(spark, tmpDir("dupbatch"))
+    def check(expected: Map[String, String], kept: String, dropped: String): Unit = {
+      assert(eng.iter().collect().map(d => d.id -> d.contents).toMap === expected)
+      expected.foreach { case (k, c) => assert(eng.get(k).contains(Doc(k, c)), k) }
+      val all = eng.search("shared", None)
+      assert(all.map(r => r.id -> r.contents).toMap === expected)
+      assert(eng.search("shared", Some(5)).forall(r => expected(r.id) == r.contents))
+      // the version scored is the version resolved
+      assert(eng.search(dropped, None).isEmpty)
+      assert(eng.search(kept, Some(50)).map(_.contents).toSet ===
+        expected.values.filter(_.endsWith(kept)).toSet)
+    }
+    eng.upsertBatch(batch(0 until 20, "alpha", "omega"))
+    eng.buildBase(graft.index.IndexBuildConfig(numShards = 2, shardGroups = 1))
+    val base = (0 until 20).map(i => s"k$i" -> s"shared v$i alpha").toMap
+    check(base, "alpha", "omega")
+    eng.upsertBatch(batch(0 until 10, "beta", "gamma"))
+    check(base ++ (0 until 10).map(i => s"k$i" -> s"shared v$i beta"), "beta", "gamma")
+  }
 }

@@ -32,10 +32,7 @@ class PlanAuditSpec extends SparkTestBase {
 
   test("termstats lookup pushes bucket+term filters") {
     val terms = index.queryTerms("merge").distinct
-    val df = spark.read.parquet(s"$indexDir/termstats")
-      .where($"bucket".isin(terms.map(index.manifest.bucketOf).distinct.map(Int.box): _*) &&
-        $"term".isin(terms.map(Long.box): _*))
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = index.termStatsFor(terms).queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: ["), s"no pushdown:\n$plan")
     assert(plan.contains("In(term") || plan.contains("EqualTo(term"), s"term not pushed:\n$plan")
   }
@@ -129,6 +126,19 @@ class PlanAuditSpec extends SparkTestBase {
     assert(plan.contains("EqualTo(doc_id"), s"doc_id not pushed:\n$plan")
     // bucket is a partition directory → partition (file-level) pruning
     assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
+      s"no bucket partition pruning:\n$plan")
+  }
+
+  test("contents resolve prunes to the hits' docstore buckets and pushes the doc_id filter") {
+    import graft.api.{Doc, SearchEngine}
+    val eng = SearchEngine.withDocuments(spark, tmpDir("audit_resolve"),
+      Seq(Doc("k1", "alpha beta"), Doc("k2", "gamma delta")))
+    assert(eng.search("alpha", Some(5)).map(_.id) === Seq("k1"))
+    val ids = Seq("k1", "k2").map(SearchEngine.surrogate).toArray
+    val plan = eng.hitRows(ids).queryExecution.executedPlan.toString
+    assert("PushedFilters: \\[[^\\]]*In\\(doc_id".r.findFirstIn(plan).nonEmpty,
+      s"doc_id not pushed:\n$plan")
+    assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan).nonEmpty,
       s"no bucket partition pruning:\n$plan")
   }
 
